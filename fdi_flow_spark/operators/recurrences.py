@@ -1,7 +1,7 @@
 """Sequential per-series recurrences — the ops Spark SQL cannot express as
 window functions (each output depends on the previous *output*).
 
-Reference semantics (``/root/reference/fdi_flow/preprocessing/filters.py``):
+Reference semantics (``preprocessing/filters.py`` of the reference):
 
 - ``exponential_smoothing``  (EWMA)      ``filters.py:42-74``
 - ``double_exponential_smoothing`` (Holt) ``filters.py:77-119`` — returns
@@ -9,30 +9,45 @@ Reference semantics (``/root/reference/fdi_flow/preprocessing/filters.py``):
 - ``kalman_filter_1d``  (scalar random-walk KF) ``filters.py:295-369``
 - ``bandpass_filter``   (FFT zero-out)   ``filters.py:241-293``
 
-Execution: ``groupBy(series_id).applyInPandas`` — one Arrow-batched Python
-call per series, vectorized inside (pandas ``ewm`` for EWMA, NumPy loops
-compiled away where possible, ``np.fft`` for bandpass). The shuffle key is
-``series_id``; with many series this is embarrassingly parallel. For a
-100 TB single giant series the kernel supports *chunked* evaluation: every
-recurrence here carries O(1) state (EWMA: s; Holt: level,trend; KF: x,p), so
-a sorted chunk sequence can be replayed with carried state — the streaming
-variants in ``fdi_flow_spark.streaming`` use exactly that property via
-``applyInPandasWithState``. Bandpass is whole-series by definition (FFT).
+Layout: one kernel per recurrence, three drivers over it.
+
+- **Kernel.** ``_ewma_scan`` / ``_holt_scan`` / ``_kalman1d_scan`` build a
+  NumPy ``scan(x, state) -> (out, state)`` that continues the recurrence
+  from a carried O(1) state (EWMA: (s,); Holt: (level, trend); KF: (x, p)).
+  ``state=None`` means "series start" and runs the reference init (EWMA
+  s0=x0; Holt level=x0, trend=x1-x0; KF x0/p0). An init that needs more
+  samples than it was given (Holt on one sample) consumes nothing and
+  returns a shorter ``out``. Parameter checks run where the kernel is
+  built, so batch, chunked and streaming raise the same error.
+- **Batch:** :func:`_apply_per_series` scans each whole series from
+  ``None`` (one Arrow-batched Python call per series).
+- **Chunked:** :func:`_chunked` serves series too long for one executor
+  group: pass 1 summarises each (series, chunk) with the kernel, a
+  per-series carry chain composes the summaries, pass 2 rescans each chunk
+  from its carry with the same kernel.
+- **Streaming:** ``fdi_flow_spark.streaming.stateful`` scans each
+  micro-batch from the state store's carry.
+
+Batch and stream agree because they run the same code. Bandpass is
+whole-series by definition (FFT) and has only the batch mode.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BooleanType,
+    ArrayType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+from pyspark.sql.window import Window
 
 from fdi_flow_spark.core.series import SERIES_ID, assert_long
 
@@ -63,115 +78,109 @@ def _apply_per_series(df: DataFrame, kernel) -> DataFrame:
     return df.groupBy(SERIES_ID).applyInPandas(fn, schema=_OUT_SCHEMA)
 
 
-# ---------------------------------------------------------------- EWMA (F1)
-
-
-def ewma_numpy(x: np.ndarray, alpha: float) -> np.ndarray:
-    """s[0]=x[0]; s[i] = a*x[i] + (1-a)*s[i-1] — pandas ewm(adjust=False)."""
+def _replay(scan, x: np.ndarray, state=None) -> np.ndarray:
+    """Scan ``x`` from ``state``. Samples a series-start init could not
+    consume (a series shorter than the init reads) are returned unchanged —
+    the reference's rule for short series."""
     if len(x) == 0:
         return x.copy()
-    return (
-        pd.Series(x).ewm(alpha=alpha, adjust=False).mean().to_numpy(dtype=np.float64)
-    )
+    out, _ = scan(x, state)
+    return out if len(out) == len(x) else np.concatenate([out, x[len(out):]])
 
 
-def exponential_smoothing(df: DataFrame, alpha: float = 0.3) -> DataFrame:
-    if not 0 < alpha < 1:
-        raise ValueError("Alpha must be between 0 and 1")
-    return _apply_per_series(df, lambda x: ewma_numpy(x, alpha))
+# ------------------------------------------------------------ chunked driver
+
+_SUMMARY_SCHEMA = StructType(
+    [
+        StructField("series_id", StringType()),
+        StructField("_chunk", LongType()),
+        StructField("_len", LongType()),
+        StructField("_head", ArrayType(DoubleType())),
+        StructField("_body", ArrayType(DoubleType())),
+    ]
+)
+_CARRY_SCHEMA = StructType(
+    [
+        StructField("series_id", StringType()),
+        StructField("_chunk", LongType()),
+        StructField("_carry", ArrayType(DoubleType())),
+    ]
+)
 
 
-def exponential_smoothing_chunked(
-    df: DataFrame, alpha: float = 0.3, chunk_size: int = 100_000
+def _cells(state):
+    return None if state is None else [float(v) for v in state]
+
+
+def _chunked(
+    df: DataFrame, scan, chunk_size: int, zero, decay, positional: bool = False
 ) -> DataFrame:
-    """EWMA for series too long for one executor group — the 100 TB path
-    for recurrences (SURVEY.md §7 'hard parts' #1).
+    """The one chunk-parallel driver for a recurrence whose state is linear
+    in the input: the state after a chunk is ``decay(carry, n, start) +
+    scan(chunk, zero(start))``, where ``zero(start)`` is the zero-carry state
+    of a chunk beginning at series rank ``start`` and ``decay`` carries the
+    incoming state through ``n`` zero inputs (closed form, O(1) per chunk).
 
-    EWMA is a *linear* recurrence, so it admits a parallel scan:
-      1. split each series into chunks of ``chunk_size``; each chunk computes
-         its zero-carry local EWMA in parallel (one applyInPandas over
-         (series, chunk) groups) plus a 2-number summary (decay A=(1-a)^len,
-         last local value B);
-      2. the carry chain c_{k+1} = B_k + A_k * c_k runs over the tiny
-         per-series summary table (one row per chunk — thousands of rows
-         for a trillion-sample series);
-      3. chunks finalize independently: s_i = local_i + (1-a)^(pos+1) * carry.
+    1. pass 1 scans each (series, chunk) once from ``zero`` (its ``_body``)
+       and, if it may head its series, once from ``None`` (its ``_head``);
+    2. the carry chain runs over one summary row per chunk: the head's
+       exact-init state, then ``decay + body`` per later chunk;
+    3. pass 2 rescans each chunk from its carry with the same kernel.
 
-    Numerically identical to the sequential recurrence up to ~1e-12 relative
-    (one extra multiply-add per element). The same decomposition pattern
-    applies to any linear recurrence (Holt is 2x2-matrix-valued).
-
-    Offset/gap robust: chunk boundaries derive arithmetically from ts
-    (no row_number window, so no per-series sort Exchange), but positions
-    are the per-chunk RANK in ts order, and the head chunk is whichever
-    chunk sorts first — a series need not start at ts=0 or be dense. The
-    reference head semantics s_0 = x_0 fall out of seeding the carry chain
-    with the head chunk's first sample (s_i = l_i + (1-a)^(i+1) * s_pre
-    with s_pre = x_0 reproduces s_0 = x_0 exactly), so every chunk runs
-    the same uniform zero-carry scan — no head special-case in the hot path.
+    Three Python passes, no row_number window: ``_chunk`` derives
+    arithmetically from ``ts``, and the head is whichever chunk sorts first,
+    so a series need not start at ts=0 or be dense. ``positional``
+    recurrences (coefficients indexed by series rank) also get each chunk's
+    start rank, from a map-side-combinable count and a window over the tiny
+    per-chunk count table, broadcast back. Matches the sequential kernel to
+    ~1e-12 relative (the carry is composed, not replayed).
     """
-    if not 0 < alpha < 1:
-        raise ValueError("Alpha must be between 0 and 1")
     assert_long(df)
-    from pyspark.sql import functions as F
-
     base = df.withColumn("_chunk", (F.col("ts") / chunk_size).cast("long"))
+    if positional:
+        counts = base.groupBy("series_id", "_chunk").agg(F.count("*").alias("_n"))
+        before = (
+            Window.partitionBy("series_id")
+            .orderBy("_chunk")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        starts = counts.select(
+            "series_id",
+            "_chunk",
+            F.coalesce(F.sum("_n").over(before), F.lit(0)).cast("long").alias("_start"),
+        )
+        base = base.join(F.broadcast(starts), ["series_id", "_chunk"])
 
-    local_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("ts", LongType()),
-            StructField("_pos", LongType()),
-            StructField("_local", DoubleType()),
-        ]
-    )
-
-    def local_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        # uniform zero-carry local scan: l_0 = a*x_0; l_i = a*x_i + (1-a)*l_{i-1}
-        local = np.empty(len(x))
-        acc = 0.0
-        for i, xi in enumerate(x):
-            acc = alpha * xi + (1 - alpha) * acc
-            local[i] = acc
+    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = pdf.sort_values("ts")["value"].to_numpy(dtype=np.float64)
+        start = int(pdf["_start"].iloc[0]) if positional else None
         return pd.DataFrame(
             {
-                "series_id": pdf["series_id"].to_numpy(),
-                "_chunk": pdf["_chunk"].to_numpy(),
-                "ts": pdf["ts"].to_numpy(),
-                "_pos": np.arange(len(x), dtype=np.int64),
-                "_local": local,
+                "series_id": [pdf["series_id"].iloc[0]],
+                "_chunk": [int(pdf["_chunk"].iloc[0])],
+                "_len": [len(x)],
+                "_head": [_cells(scan(x, None)[1]) if not start else None],
+                "_body": [_cells(scan(x, zero(start))[1]) if start != 0 else None],
             }
         )
 
-    local = base.groupBy("series_id", "_chunk").applyInPandas(local_fn, local_schema)
-
-    # chunk summaries -> sequential carry chain over the tiny summary table
-    summaries = local.groupBy("series_id", "_chunk").agg(
-        F.count("*").alias("_len"),
-        F.max_by("_local", "_pos").alias("_B"),
-        F.min_by("_local", "_pos").alias("_l0"),  # = a*x_first -> seeds the head
-    )
-    carry_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("_carry", DoubleType()),
-        ]
-    )
-
-    def carry_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def chain(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_chunk")
-        carries = []
-        # carry INTO the head chunk is its own first sample (l_0 / a), which
-        # turns the uniform zero-carry scan into the s_0 = x_0 reference head
-        c = float(pdf["_l0"].iloc[0]) / alpha
-        for _, row in pdf.iterrows():
-            carries.append(c)
-            A = (1 - alpha) ** int(row["_len"])
-            c = float(row["_B"]) + A * c
+        carries, state, start = [], None, 0
+        for n, head, body in zip(pdf["_len"], pdf["_head"], pdf["_body"]):
+            carries.append(_cells(state))  # the head takes no carry
+            if state is not None:
+                state = np.add(decay(state, int(n), start), body)
+            elif head is None and len(pdf) > 1:
+                raise ValueError(
+                    "chunked scan: the head chunk holds fewer samples than the "
+                    "series-start init reads (its look-ahead would cross the "
+                    "chunk boundary); use the sequential operator or a larger "
+                    "chunk_size"
+                )
+            else:
+                state = head
+            start += int(n)
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].to_numpy(),
@@ -180,226 +189,153 @@ def exponential_smoothing_chunked(
             }
         )
 
-    carries = summaries.groupBy("series_id").applyInPandas(carry_fn, carry_schema)
-
-    out = local.join(F.broadcast(carries), ["series_id", "_chunk"])
-    value = F.col("_local") + F.pow(F.lit(1 - alpha), F.col("_pos") + 1) * F.col("_carry")
-    return out.select("series_id", "ts", value.alias("value"))
-
-
-def double_exponential_smoothing_chunked(
-    df: DataFrame, alpha: float = 0.3, beta: float = 0.1, chunk_size: int = 100_000
-) -> DataFrame:
-    """Holt smoothing for series too long for one executor group — the same
-    parallel-scan decomposition as :func:`exponential_smoothing_chunked`,
-    generalized to the 2x2 affine recurrence the EWMA docstring promises.
-
-    Holt's update is affine in the state s = (level, trend)^T:
-        s_i = A s_{i-1} + x_i * c,
-        A = [[1-a, 1-a], [-ab, 1-ab]],  c = [a, ab]^T,  output_i = level_i + trend_i
-    so chunks compose: a chunk of length L maps an incoming state carry to
-    ``A^L carry + v`` where v is the chunk's zero-state local result. The
-    carry chain runs over one tiny summary row per chunk; rows finalize with
-    ``out_i += [1,1] . A^(pos+1) carry`` (running 2-vector, O(1)/row).
-
-    The head chunk runs the exact reference init (level=x0, trend=x1-x0);
-    Matches the sequential kernel to ~1e-12 relative.
-
-    Plan shape: exactly two Arrow scans of the grouped data — one emitting a
-    1-row-per-chunk state summary, one emitting the output rows with the
-    carry folded into the scan's initial state — plus the tiny per-series
-    carry chain. ``_chunk`` derives arithmetically from ``ts`` (no
-    row_number window, no sort Exchange).
-
-    Offset/gap robust: the head chunk is whichever chunk sorts FIRST per
-    series, not literally ``_chunk == 0``, so a series starting at an
-    arbitrary ts (or with holes) still gets the reference init. Each chunk
-    emits BOTH a zero-carry affine state (for composition) and an
-    exact-init state (used iff it turns out to be the head), and the carry
-    chain picks per sort position — no extra pass over the data. The one
-    unsupported corner: a head chunk holding a single sample of a longer
-    series (the init's x[1] look-ahead would cross a chunk boundary) raises
-    cleanly rather than guessing.
-    """
-    if not 0 < alpha < 1 or not 0 < beta < 1:
-        raise ValueError("Alpha and beta must be between 0 and 1")
-    if chunk_size < 2:
-        raise ValueError("chunk_size must be >= 2 (Holt init reads x[1])")
-    assert_long(df)
-    from pyspark.sql import functions as F
-
-    a, b = alpha, beta
-    A = np.array([[1 - a, 1 - a], [-a * b, 1 - a * b]])
-    c = np.array([a, a * b])
-
-    base = df.withColumn("_chunk", (F.col("ts") / chunk_size).cast("long"))
-
-    def scan(x: np.ndarray, is_head: bool, carry: np.ndarray):
-        """Replay one chunk from ``carry`` state; returns (out, final state).
-        The head chunk ignores the (zero) carry and runs the reference init."""
-        out = np.empty(len(x))
-        if is_head:
-            if len(x) < 2:  # whole series shorter than 2: returned as-is
-                out[:] = x
-                return out, np.zeros(2)
-            level, trend = x[0], x[1] - x[0]
-            out[0] = level + trend
-            for i in range(1, len(x)):
-                prev = level
-                level = a * x[i] + (1 - a) * (level + trend)
-                trend = b * (level - prev) + (1 - b) * trend
-                out[i] = level + trend
-            return out, np.array([level, trend])
-        s = carry.astype(np.float64).copy()
-        for i, xi in enumerate(x):
-            s = A @ s + xi * c
-            out[i] = s[0] + s[1]
-        return out, s
-
-    sum_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("_len", LongType()),
-            StructField("_v0", DoubleType()),
-            StructField("_v1", DoubleType()),
-            StructField("_h0", DoubleType()),
-            StructField("_h1", DoubleType()),
-        ]
-    )
-
-    def sum_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def rescan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts")
+        carry = pdf["_carry"].iloc[0]
         x = pdf["value"].to_numpy(dtype=np.float64)
-        # zero-carry state (the carry chain composes A^len @ carry + v) AND
-        # the exact-init state, consumed only if this chunk is the head
-        _, s = scan(x, False, np.zeros(2))
-        _, h = scan(x, True, np.zeros(2))
-        return pd.DataFrame(
-            {
-                "series_id": [pdf["series_id"].iloc[0]],
-                "_chunk": [int(pdf["_chunk"].iloc[0])],
-                "_len": [len(x)],
-                "_v0": [s[0]],
-                "_v1": [s[1]],
-                "_h0": [h[0]],
-                "_h1": [h[1]],
-            }
-        )
-
-    summaries = base.groupBy("series_id", "_chunk").applyInPandas(sum_fn, sum_schema)
-
-    carry_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("_c0", DoubleType()),
-            StructField("_c1", DoubleType()),
-            StructField("_is_head", BooleanType()),
-        ]
-    )
-
-    def carry_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_chunk")
-        if len(pdf) > 1 and int(pdf["_len"].iloc[0]) < 2:
-            raise ValueError(
-                "Holt chunked: head chunk holds a single sample of a longer "
-                "series (init's x[1] look-ahead crosses the chunk boundary); "
-                "use double_exponential_smoothing or a larger chunk_size"
-            )
-        carries0, carries1 = [], []
-        s = np.zeros(2)  # carry INTO each chunk; the head takes none
-        for i, (_, row) in enumerate(pdf.iterrows()):
-            carries0.append(s[0])
-            carries1.append(s[1])
-            if i == 0:  # head: outgoing state is the exact-init scan's
-                s = np.array([row["_h0"], row["_h1"]])
-            else:
-                P = np.linalg.matrix_power(A, int(row["_len"]))
-                s = P @ s + np.array([row["_v0"], row["_v1"]])
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy(),
-                "_chunk": pdf["_chunk"].to_numpy(),
-                "_c0": carries0,
-                "_c1": carries1,
-                "_is_head": [i == 0 for i in range(len(pdf))],
-            }
-        )
-
-    carries = summaries.groupBy("series_id").applyInPandas(carry_fn, carry_schema)
-
-    fin_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("ts", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-
-    def final_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        carry = np.array([pdf["_c0"].iloc[0], pdf["_c1"].iloc[0]])
-        out, _ = scan(x, bool(pdf["_is_head"].iloc[0]), carry)
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].to_numpy(),
                 "ts": pdf["ts"].to_numpy(),
-                "value": out,
+                "value": _replay(scan, x, None if carry is None else tuple(carry.tolist())),
             }
         )
 
-    joined = base.join(F.broadcast(carries), ["series_id", "_chunk"])
-    return joined.groupBy("series_id", "_chunk").applyInPandas(final_fn, fin_schema)
+    by_chunk = ["series_id", "_chunk"]
+    summaries = base.groupBy(*by_chunk).applyInPandas(summarize, _SUMMARY_SCHEMA)
+    carries = summaries.groupBy("series_id").applyInPandas(chain, _CARRY_SCHEMA)
+    joined = base.join(F.broadcast(carries), by_chunk)
+    return joined.groupBy(*by_chunk).applyInPandas(rescan, _OUT_SCHEMA)
+
+
+# ---------------------------------------------------------------- EWMA (F1)
+
+
+def _ewma_scan(alpha: float):
+    """s[0]=x[0]; s[i] = a*x[i] + (1-a)*s[i-1] — pandas ewm(adjust=False)."""
+    if not 0 < alpha < 1:
+        raise ValueError("Alpha must be between 0 and 1")
+
+    def scan(x: np.ndarray, state):
+        # a carried s rides in front as the seed sample and is dropped again
+        seq = x if state is None else np.concatenate((state, x))
+        out = pd.Series(seq).ewm(alpha=alpha, adjust=False).mean().to_numpy(np.float64)
+        out = out if state is None else out[1:]
+        return out, (float(out[-1]),)
+
+    return scan
+
+
+def ewma_numpy(x: np.ndarray, alpha: float) -> np.ndarray:
+    return _replay(_ewma_scan(alpha), x)
+
+
+def exponential_smoothing(df: DataFrame, alpha: float = 0.3) -> DataFrame:
+    return _apply_per_series(df, partial(_replay, _ewma_scan(alpha)))
+
+
+def exponential_smoothing_chunked(
+    df: DataFrame, alpha: float = 0.3, chunk_size: int = 100_000
+) -> DataFrame:
+    """EWMA for series too long for one executor group — the 100 TB path
+    for recurrences (SURVEY.md §7 'hard parts' #1). EWMA is linear, so a
+    carry s decays as (1-a)^n through n samples; see :func:`_chunked`."""
+    return _chunked(
+        df,
+        _ewma_scan(alpha),
+        chunk_size,
+        zero=lambda start: (0.0,),
+        decay=lambda s, n, start: (s[0] * (1 - alpha) ** n,),
+    )
 
 
 # ----------------------------------------------------------------- Holt (F2)
 
 
-def holt_numpy(x: np.ndarray, alpha: float, beta: float) -> np.ndarray:
-    n = len(x)
-    if n < 2:
-        return x.copy()
-    level = np.empty(n)
-    trend = np.empty(n)
-    level[0] = x[0]
-    trend[0] = x[1] - x[0]
+def _holt_scan(alpha: float, beta: float):
+    if not 0 < alpha < 1 or not 0 < beta < 1:
+        raise ValueError("Alpha and beta must be between 0 and 1")
     a, b = alpha, beta
-    for i in range(1, n):
-        level[i] = a * x[i] + (1 - a) * (level[i - 1] + trend[i - 1])
-        trend[i] = b * (level[i] - level[i - 1]) + (1 - b) * trend[i - 1]
-    return level + trend
+
+    def scan(x: np.ndarray, state):
+        vals = x.tolist()
+        out = np.empty(len(vals))
+        if state is not None:
+            (level, trend), first = state, 0
+        elif len(vals) < 2:  # the init reads x[1]: nothing to emit yet
+            return out[:0], None
+        else:
+            level, trend, first = vals[0], vals[1] - vals[0], 1
+            out[0] = level + trend
+        for i in range(first, len(vals)):
+            prev = level
+            level = a * vals[i] + (1 - a) * (level + trend)
+            trend = b * (level - prev) + (1 - b) * trend
+            out[i] = level + trend
+        return out, (level, trend)
+
+    return scan
+
+
+def holt_numpy(x: np.ndarray, alpha: float, beta: float) -> np.ndarray:
+    return _replay(_holt_scan(alpha, beta), x)
 
 
 def double_exponential_smoothing(
     df: DataFrame, alpha: float = 0.3, beta: float = 0.1
 ) -> DataFrame:
-    if not 0 < alpha < 1 or not 0 < beta < 1:
-        raise ValueError("Alpha and beta must be between 0 and 1")
-    return _apply_per_series(df, lambda x: holt_numpy(x, alpha, beta))
+    return _apply_per_series(df, partial(_replay, _holt_scan(alpha, beta)))
+
+
+def double_exponential_smoothing_chunked(
+    df: DataFrame, alpha: float = 0.3, beta: float = 0.1, chunk_size: int = 100_000
+) -> DataFrame:
+    """Holt smoothing for series too long for one executor group. Holt's
+    update is affine in s = (level, trend)^T: s_i = A s_{i-1} + x_i c with
+    A = [[1-a, 1-a], [-ab, 1-ab]], so a carry decays as A^n s through n
+    samples; see :func:`_chunked`. A head chunk holding a single sample of a
+    longer series (the init's x[1] look-ahead would cross the chunk
+    boundary) raises rather than guessing."""
+    scan = _holt_scan(alpha, beta)
+    if chunk_size < 2:
+        raise ValueError("chunk_size must be >= 2 (Holt init reads x[1])")
+    A = np.array([[1 - alpha, 1 - alpha], [-alpha * beta, 1 - alpha * beta]])
+    return _chunked(
+        df,
+        scan,
+        chunk_size,
+        zero=lambda start: (0.0, 0.0),
+        decay=lambda s, n, start: np.linalg.matrix_power(A, n) @ s,
+    )
 
 
 # ----------------------------------------------------- scalar Kalman (F6)
 
 
+def _kalman1d_scan(q: float, r: float, x0: float | None, p0: float):
+    def scan(x: np.ndarray, state):
+        vals = x.tolist()
+        out = np.empty(len(vals))
+        if state is not None:
+            (s, p), first = state, 0
+        else:
+            s, p, first = float(vals[0] if x0 is None else x0), float(p0), 1
+            out[0] = s
+        for i in range(first, len(vals)):
+            p_pred = p + q
+            k = p_pred / (p_pred + r)
+            s = s + k * (vals[i] - s)
+            p = (1 - k) * p_pred
+            out[i] = s
+        return out, (s, p)
+
+    return scan
+
+
 def kalman1d_numpy(
     x: np.ndarray, q: float, r: float, x0: float | None, p0: float
 ) -> np.ndarray:
-    n = len(x)
-    if n == 0:
-        return x.copy()
-    s = x[0] if x0 is None else x0
-    p = p0
-    out = np.empty(n)
-    out[0] = s
-    for i in range(1, n):
-        p_pred = p + q
-        k = p_pred / (p_pred + r)
-        s = s + k * (x[i] - s)
-        p = (1 - k) * p_pred
-        out[i] = s
-    return out
+    return _replay(_kalman1d_scan(q, r, x0, p0), x)
 
 
 def kalman_filter_1d(
@@ -409,30 +345,29 @@ def kalman_filter_1d(
     x0: float | None = None,
     p0: float = 1.0,
 ) -> DataFrame:
-    return _apply_per_series(df, lambda x: kalman1d_numpy(x, q, r, x0, p0))
+    return _apply_per_series(df, partial(_replay, _kalman1d_scan(q, r, x0, p0)))
 
 
-def _kalman1d_gains(q: float, r: float, p0: float, max_len: int = 100_000) -> np.ndarray:
+def _kalman1d_gains(scan, p0: float, max_len: int = 100_000):
     """The scalar Kalman gain sequence k_1, k_2, ... is DATA-INDEPENDENT:
     the covariance follows the scalar Riccati recursion p' = (p+q)r/(p+q+r)
     from p0 alone, and for q > 0 it converges geometrically to the steady
     state, so the whole sequence is (converged prefix, constant tail).
-    Returns the prefix up to machine-precision convergence; the last entry
-    is the steady-state gain. Raises if convergence needs more than
-    ``max_len`` steps (q ~ 0 decays only harmonically — use the sequential
-    operator there)."""
-    gains = []
-    p = p0
+    Steps the kernel on a unit sample from x=0 (its output IS the gain) and
+    returns the gain prefix up to machine-precision convergence (the last
+    entry is the steady-state gain) with the covariances p_0..p_N. Raises if
+    convergence needs more than ``max_len`` steps (q ~ 0 decays only
+    harmonically — use the sequential operator there)."""
+    gains, ps, one = [], [float(p0)], np.ones(1)
     for _ in range(max_len):
-        p_pred = p + q
-        k = p_pred / (p_pred + r)
+        (k,), (_, p) = scan(one, (0.0, ps[-1]))
         # the float fixed point is a last-ulp 2-cycle, never exact equality;
         # a few-ulp relative test converges geometrically (q > 0) while the
         # harmonic q = 0 decay (diff ~ 1/i^2 vs tol ~ 1/i) still times out
         if gains and abs(k - gains[-1]) <= 1e-14 * abs(k):
-            return np.array(gains)
+            return np.array(gains), ps
         gains.append(k)
-        p = (1.0 - k) * p_pred
+        ps.append(p)
     raise ValueError(
         f"Kalman gain sequence did not reach steady state within {max_len} "
         "steps (q is zero or degenerate); use kalman_filter_1d instead"
@@ -447,126 +382,31 @@ def kalman_filter_1d_chunked(
     p0: float = 1.0,
     chunk_size: int = 100_000,
 ) -> DataFrame:
-    """Scalar Kalman smoothing for series too long for one executor group —
-    the third member of the chunk-parallel recurrence family (EWMA, Holt,
-    now F6).
+    """Scalar Kalman smoothing for series too long for one executor group.
 
-    Because the gain sequence is data-independent (see
-    :func:`_kalman1d_gains`), the state update collapses to a linear
-    time-varying recurrence s_i = (1-k_i) s_{i-1} + k_i x_i with KNOWN
-    coefficients — exactly the EWMA decomposition with a position-dependent
-    alpha: zero-carry local scans per (series, chunk), a per-series carry
-    chain over 2-number chunk summaries (decay product A, last local B),
-    and an embarrassingly parallel finalize s_i = local_i + cumA_i * carry.
-    Matches :func:`kalman_filter_1d` to ~1e-12 relative.
-
-    Unlike the constant-coefficient EWMA/Holt chunked scans, the gains here
-    are POSITIONAL (k_i is the i-th Riccati gain, not "the gain at ts=i"),
-    so a series whose ts does not start at 0, or has gaps, must still index
-    the gain sequence by per-series rank. Ranks are derived without any
-    global sort: a map-side-combinable per-(series, chunk) count feeds a
-    tiny window cumsum over chunk summaries, and each chunk's start rank is
-    broadcast back — the chunk boundaries themselves stay arithmetic
-    (ts // chunk_size), they just no longer double as positions.
+    The gain sequence is data-independent (see :func:`_kalman1d_gains`), so
+    the x-update s_i = (1-k_i) s_{i-1} + k_i x_i is linear with KNOWN
+    positional coefficients: a chunk starting at series rank ``start``
+    begins from covariance p_{start-1}, and a carry decays by the product of
+    (1-k_i) over the chunk's ranks. The gains are indexed by per-series RANK,
+    not ts, so the driver runs positionally; see :func:`_chunked`.
     """
-    assert_long(df)
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    scan = _kalman1d_scan(q, r, x0, p0)
+    gains, ps = _kalman1d_gains(scan, p0)
 
-    gains = _kalman1d_gains(q, r, p0)
-    n_prefix = len(gains)
+    def decay(s, n, start):
+        lo, hi = start - 1, start - 1 + n  # update at rank m uses gains[m-1]
+        tail = max(0, hi - max(lo, len(gains)))  # ranks past the prefix
+        return (s[0] * np.prod(1.0 - gains[lo:hi]) * (1.0 - gains[-1]) ** tail, 0.0)
 
-    base = df.withColumn("_chunk", (F.col("ts") / chunk_size).cast("long"))
-
-    # Per-chunk row counts -> each chunk's starting rank within its series.
-    # The count aggregation is map-side combinable; the window runs over the
-    # tiny (series, chunk) summary table, never the data.
-    counts = base.groupBy("series_id", "_chunk").agg(F.count("*").alias("_n"))
-    w = (
-        Window.partitionBy("series_id")
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    return _chunked(
+        df,
+        scan,
+        chunk_size,
+        zero=lambda start: (0.0, ps[min(start - 1, len(ps) - 1)]),
+        decay=decay,
+        positional=True,
     )
-    starts = counts.withColumn(
-        "_start", F.coalesce(F.sum("_n").over(w), F.lit(0)).cast("long")
-    ).drop("_n")
-    base = base.join(F.broadcast(starts), ["series_id", "_chunk"])
-
-    local_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("ts", LongType()),
-            StructField("_local", DoubleType()),
-            StructField("_cumA", DoubleType()),
-        ]
-    )
-
-    def local_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        ts = pdf["ts"].to_numpy(dtype=np.int64)
-        start = int(pdf["_start"].iloc[0])
-        if start == 0:
-            local = kalman1d_numpy(x, q, r, x0, p0)  # exact head semantics
-            cumA = np.zeros(len(x))  # no incoming carry for the head
-        else:
-            # global 0-based positions; update at position p uses gains[p-1]
-            pos = start + np.arange(len(x), dtype=np.int64)
-            kk = gains[np.minimum(pos - 1, n_prefix - 1)]
-            one_minus = 1.0 - kk
-            local = np.empty(len(x))
-            acc = 0.0
-            for i in range(len(x)):
-                acc = kk[i] * x[i] + one_minus[i] * acc
-                local[i] = acc
-            cumA = np.cumprod(one_minus)
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy(),
-                "_chunk": pdf["_chunk"].to_numpy(),
-                "ts": ts,
-                "_local": local,
-                "_cumA": cumA,
-            }
-        )
-
-    local = base.groupBy("series_id", "_chunk").applyInPandas(local_fn, local_schema)
-
-    summaries = local.groupBy("series_id", "_chunk").agg(
-        F.max_by("_local", "ts").alias("_B"),
-        F.max_by("_cumA", "ts").alias("_A"),
-    )
-    carry_schema = StructType(
-        [
-            StructField("series_id", StringType()),
-            StructField("_chunk", LongType()),
-            StructField("_carry", DoubleType()),
-        ]
-    )
-
-    def carry_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_chunk")
-        carries = []
-        c = 0.0
-        for _, row in pdf.iterrows():
-            carries.append(c)
-            # head chunk's state is absolute (carry 0 into chunk 1 would
-            # lose it): its B IS the state, A=0 kills any incoming term
-            c = float(row["_B"]) + float(row["_A"]) * c
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy(),
-                "_chunk": pdf["_chunk"].to_numpy(),
-                "_carry": carries,
-            }
-        )
-
-    carries = summaries.groupBy("series_id").applyInPandas(carry_fn, carry_schema)
-
-    out = local.join(F.broadcast(carries), ["series_id", "_chunk"])
-    value = F.col("_local") + F.col("_cumA") * F.col("_carry")
-    return out.select("series_id", "ts", value.alias("value"))
 
 
 # ------------------------------------------------------------ bandpass (F5)

@@ -440,7 +440,6 @@ def curation_stream_score(
     dsir_seed: int = 7,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_models: bool = True,
 ) -> DataFrame:
     """The composed ingest-curation stage as ONE streaming-executable
     plan: unicode cleanup -> token-count gate -> exact-dedup flag against
@@ -522,17 +521,14 @@ def curation_stream_score(
     # ESTIMATE is a product that blows past the auto-broadcast threshold
     # — Catalyst picked SortMergeJoin, paying a full gram-stream Exchange
     # + Sort per model join (2 of the 3 stream shuffles in the composed
-    # scoring plan; measured r15). ``broadcast_models=False`` keeps the
-    # estimate-driven legacy shape (A/B evidence only).
+    # scoring plan; measured r15).
     nbm = nb_model.select(
         F.col("b").alias("_bn"), F.col("w").alias("_w"), F.col("prior").alias("_pr")
     )
     dsm = dsir_model.select(F.col("b").alias("_bd"), F.col("logr").alias("_lr"))
-    if broadcast_models:
-        nbm, dsm = F.broadcast(nbm), F.broadcast(dsm)
     return (
-        g.join(nbm, "_bn")
-        .join(dsm, "_bd")
+        g.join(F.broadcast(nbm), "_bn")
+        .join(F.broadcast(dsm), "_bd")
         .groupBy("id")
         .agg(
             F.first("is_exact_dup").alias("is_exact_dup"),
@@ -569,7 +565,6 @@ def curation_deploy_score(
     lang_col: str = "lang",
     broadcast_model: bool = True,
     lm_counts: DataFrame | None = None,
-    broadcast_models: bool = True,
 ) -> DataFrame:
     """The FULL deployment-shape ingest stage (r11, r10 VERDICT stretch
     item 8): :func:`curation_stream_score`'s composed plan (cleanup ->
@@ -703,16 +698,14 @@ def curation_deploy_score(
         F.col("b").alias("_bn"), F.col("w").alias("_w"), F.col("prior").alias("_pr")
     )
     dsm = dsir_model.select(F.col("b").alias("_bd"), F.col("logr").alias("_lr"))
-    if broadcast_models:
-        nbm, dsm = F.broadcast(nbm), F.broadcast(dsm)
     logp = F.when(
         F.col("w1").isNotNull(),
         F.log(F.coalesce(F.col("_c12"), F.lit(0)) + F.lit(1))
         - F.log(F.coalesce(F.col("_c1"), F.lit(0)) + F.col("_v")),
     )
     rows = (
-        g.join(nbm, "_bn", "left")
-        .join(dsm, "_bd", "left")
+        g.join(F.broadcast(nbm), "_bn", "left")
+        .join(F.broadcast(dsm), "_bd", "left")
         .join(c12, ["w1", "w2"], "left")
         .join(c1, ["w1"], "left")
         .crossJoin(F.broadcast(vocab))

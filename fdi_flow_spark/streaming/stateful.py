@@ -1,13 +1,25 @@
 """Structured Streaming variants of the stateful operators.
 
 The reference hints at streaming reuse via ``KalmanFilter.reset()``
-(``/root/reference/fdi_flow/preprocessing/filters.py:358-361``) and the
-observers' one-``step``-per-sample APIs (``state_observers/*.py``); it has no
-actual streaming runtime. Here each recurrence becomes an
-``applyInPandasWithState`` operator keyed by ``series_id``: the carried state
-is exactly the recurrence's O(1)/O(n²) state (EWMA: s; KF1D: x,p; matrix
-observer: x̂ flattened), so batch replay ≡ streaming replay — asserted in
-``tests/test_streaming.py``.
+(``preprocessing/filters.py:358-361`` of the reference) and the observers'
+one-``step``-per-sample APIs (``state_observers/*.py``); it has no actual
+streaming runtime.
+
+Layout: one driver, :func:`_stream`, is this module's
+``applyInPandasWithState`` site for every ``(series_id, ts, value)``
+recurrence. It takes a kernel ``scan(x, state) -> (out, state)``, a state
+schema and an output schema; per key and micro-batch it loads the carried
+state, sorts the rows on ``ts``, scans them and stores the outgoing state.
+The kernels are the batch ones — EWMA, Holt and the scalar Kalman filter
+come from ``operators.recurrences`` — so batch replay ≡ streaming replay
+because both run the same code (asserted bit-for-bit in
+``tests/test_streaming.py``). CUSUM and Page–Hinkley have JVM batch
+operators, so their O(1) recursions are written here, once. The observer
+keeps its own state function: it orders on ``step``, reads array columns
+and rebuilds an observer object per batch.
+
+Rows a series-start init cannot consume yet (Holt's first sample, whose
+init reads x[1]) stay in state and are re-fed with the next micro-batch.
 
 Windowed segmentation maps to event-time sliding windows with a watermark
 (Spark's native late-data semantics; the reference has none, so watermark
@@ -36,6 +48,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from fdi_flow_spark.operators.recurrences import (
+    _ewma_scan,
+    _holt_scan,
+    _kalman1d_scan,
+)
+
 _OUT = StructType(
     [
         StructField("series_id", StringType()),
@@ -43,76 +61,63 @@ _OUT = StructType(
         StructField("value", DoubleType()),
     ]
 )
+_HELD = [
+    StructField("_held_ts", ArrayType(LongType())),
+    StructField("_held_x", ArrayType(DoubleType())),
+]
+
+
+def _doubles(*names: str) -> StructType:
+    return StructType([StructField(n, DoubleType()) for n in names])
+
+
+def _stream(df: DataFrame, scan, state_schema: StructType, out_schema: StructType):
+    """Run ``scan`` per ``series_id`` over a stream of (series_id, ts, value).
+
+    ``scan(x, state)`` gets the micro-batch's values in ts order and the
+    carried state (``None`` before the first sample) and returns the
+    outputs (one array for the ``value`` column, or a frame of the output
+    columns after ``ts``) plus the outgoing state, a tuple matching
+    ``state_schema``. Rows it leaves unconsumed are held in state."""
+    names = out_schema.fieldNames()[2:]
+    width = len(state_schema.fields)
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        carry, held_ts, held_x = None, [], []
+        if state.exists:
+            *carry, held_ts, held_x = state.get
+            carry = None if carry[0] is None else tuple(carry)
+        pdf = pd.concat(list(pdfs)).sort_values("ts")
+        ts = np.concatenate([np.asarray(held_ts, np.int64), pdf["ts"].to_numpy(np.int64)])
+        x = np.concatenate([np.asarray(held_x, np.float64), pdf["value"].to_numpy(np.float64)])
+        out, carry = scan(x, carry)
+        n = len(out)
+        state.update((*(carry or (None,) * width), ts[n:].tolist(), x[n:].tolist()))
+        frame = pd.DataFrame(out).set_axis(names, axis=1)
+        frame.insert(0, "ts", ts[:n])
+        frame.insert(0, "series_id", key[0])
+        yield frame
+
+    return df.groupBy("series_id").applyInPandasWithState(
+        fn,
+        out_schema,
+        StructType(state_schema.fields + _HELD),
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_ewma(df: DataFrame, alpha: float) -> DataFrame:
     """EWMA over a stream of (series_id, ts, value). State: last smoothed s."""
-    state_schema = StructType([StructField("s", DoubleType())])
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        s = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            res = np.empty(len(vals))
-            for i, x in enumerate(vals):
-                s = x if s is None else alpha * x + (1 - alpha) * s
-                res[i] = s
-            out.append(
-                pd.DataFrame(
-                    {"series_id": key[0], "ts": pdf["ts"].to_numpy(), "value": res}
-                )
-            )
-        state.update((float(s),))
-        yield pd.concat(out)
-
-    return df.groupBy("series_id").applyInPandasWithState(
-        fn, _OUT, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stream(df, _ewma_scan(alpha), _doubles("s"), _OUT)
 
 
 def streaming_kalman_1d(
     df: DataFrame, q: float = 1.0, r: float = 1.0, x0: float | None = None, p0: float = 1.0
 ) -> DataFrame:
     """Scalar random-walk Kalman filter (reference F6) over a stream.
-    State: (x, p, started)."""
-    state_schema = StructType(
-        [StructField("x", DoubleType()), StructField("p", DoubleType())]
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            x, p = state.get
-            started = True
-        else:
-            x, p, started = None, p0, False
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            res = np.empty(len(vals))
-            for i, z in enumerate(vals):
-                if not started:
-                    x = z if x0 is None else x0
-                    started = True
-                else:
-                    p_pred = p + q
-                    k = p_pred / (p_pred + r)
-                    x = x + k * (z - x)
-                    p = (1 - k) * p_pred
-                res[i] = x
-            out.append(
-                pd.DataFrame(
-                    {"series_id": key[0], "ts": pdf["ts"].to_numpy(), "value": res}
-                )
-            )
-        state.update((float(x), float(p)))
-        yield pd.concat(out)
-
-    return df.groupBy("series_id").applyInPandasWithState(
-        fn, _OUT, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    State: (x, p)."""
+    return _stream(df, _kalman1d_scan(q, r, x0, p0), _doubles("x", "p"), _OUT)
 
 
 def streaming_holt(df: DataFrame, alpha: float = 0.3, beta: float = 0.1) -> DataFrame:
@@ -120,58 +125,14 @@ def streaming_holt(df: DataFrame, alpha: float = 0.3, beta: float = 0.1) -> Data
 
     The batch kernel initializes ``trend[0] = x[1] - x[0]`` — a one-sample
     LOOK-AHEAD — so the first input row cannot be emitted until the second
-    arrives: it rides in state as a pending sample and both outputs are
+    arrives: it rides in state as a held sample and both outputs are
     emitted together (possibly in a later micro-batch than the first row's
     arrival; append mode permits that). Bit-equal to the batch operator for
     series with >= 2 samples — a 1-sample stream never emits (the batch op
     returns it unchanged, which a stream cannot know to do).
-    State: (pending_ts, pending_x, level, trend, phase).
+    State: (level, trend), plus the held first sample.
     """
-    state_schema = StructType(
-        [
-            StructField("pts", LongType()),
-            StructField("px", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("phase", LongType()),  # 0=empty, 1=pending, 2=running
-        ]
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            pts, px, level, trend, phase = state.get
-        else:
-            pts, px, level, trend, phase = 0, 0.0, 0.0, 0.0, 0
-        out_ts, out_v = [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            for ts, x in zip(pdf["ts"].to_numpy(), pdf["value"].to_numpy(np.float64)):
-                if phase == 0:
-                    pts, px, phase = int(ts), float(x), 1
-                elif phase == 1:
-                    level, trend = px, x - px  # level[0]=x0, trend[0]=x1-x0
-                    out_ts.append(pts)
-                    out_v.append(level + trend)
-                    prev_level = level
-                    level = alpha * x + (1 - alpha) * (level + trend)
-                    trend = beta * (level - prev_level) + (1 - beta) * trend
-                    out_ts.append(int(ts))
-                    out_v.append(level + trend)
-                    phase = 2
-                else:
-                    prev_level = level
-                    level = alpha * x + (1 - alpha) * (level + trend)
-                    trend = beta * (level - prev_level) + (1 - beta) * trend
-                    out_ts.append(int(ts))
-                    out_v.append(level + trend)
-        state.update((int(pts), float(px), float(level), float(trend), int(phase)))
-        yield pd.DataFrame(
-            {"series_id": key[0], "ts": out_ts, "value": out_v}
-        ) if out_ts else pd.DataFrame({"series_id": [], "ts": [], "value": []})
-
-    return df.groupBy("series_id").applyInPandasWithState(
-        fn, _OUT, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stream(df, _holt_scan(alpha, beta), _doubles("level", "trend"), _OUT)
 
 
 _CUSUM_OUT = StructType(
@@ -198,41 +159,21 @@ def streaming_cusum(
     ``target`` must be explicit here: the batch default (per-series mean)
     is a two-pass statistic a stream cannot know. Fit it offline, deploy it
     online — the scaler/TF-IDF fit/score pattern."""
-    state_schema = StructType(
-        [StructField("sp", DoubleType()), StructField("sn", DoubleType())]
-    )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        sp, sn = state.get if state.exists else (0.0, 0.0)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            pos = np.empty(len(vals))
-            neg = np.empty(len(vals))
-            for i, x in enumerate(vals):
-                sp = max(0.0, sp + (x - target - k))
-                sn = max(0.0, sn + (target - x - k))
-                pos[i] = sp
-                neg[i] = sn
-            out.append(
-                pd.DataFrame(
-                    {
-                        "series_id": key[0],
-                        "ts": pdf["ts"].to_numpy(),
-                        "value": vals,
-                        "cusum_pos": pos,
-                        "cusum_neg": neg,
-                        "alarm": (pos > h) | (neg > h),
-                    }
-                )
-            )
-        state.update((float(sp), float(sn)))
-        yield pd.concat(out)
+    def scan(x: np.ndarray, state):
+        sp, sn = state or (0.0, 0.0)
+        pos = np.empty(len(x))
+        neg = np.empty(len(x))
+        for i, xi in enumerate(x.tolist()):
+            sp = max(0.0, sp + (xi - target - k))
+            sn = max(0.0, sn + (target - xi - k))
+            pos[i] = sp
+            neg[i] = sn
+        alarm = (pos > h) | (neg > h)
+        cols = {"value": x, "cusum_pos": pos, "cusum_neg": neg, "alarm": alarm}
+        return pd.DataFrame(cols), (sp, sn)
 
-    return df.groupBy("series_id").applyInPandasWithState(
-        fn, _CUSUM_OUT, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stream(df, scan, _doubles("sp", "sn"), _CUSUM_OUT)
 
 
 _PH_OUT = StructType(
@@ -252,44 +193,22 @@ def streaming_page_hinkley(df: DataFrame, delta: float, lam: float) -> DataFrame
     — O(1) per series; the running mean continues exactly where the last
     micro-batch left off, so batch ≡ streaming (float atol)."""
     state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("csum", DoubleType()),
-            StructField("m", DoubleType()),
-            StructField("mmin", DoubleType()),
-        ]
+        [StructField("n", LongType())] + _doubles("csum", "m", "mmin").fields
     )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        n, csum, m, mmin = state.get if state.exists else (0, 0.0, 0.0, np.inf)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            ph = np.empty(len(vals))
-            for i, x in enumerate(vals):
-                n += 1
-                csum += x
-                m += x - csum / n - delta
-                mmin = min(mmin, m)
-                ph[i] = m - mmin
-            out.append(
-                pd.DataFrame(
-                    {
-                        "series_id": key[0],
-                        "ts": pdf["ts"].to_numpy(),
-                        "value": vals,
-                        "ph_stat": ph,
-                        "alarm": ph > lam,
-                    }
-                )
-            )
-        state.update((int(n), float(csum), float(m), float(mmin)))
-        yield pd.concat(out)
+    def scan(x: np.ndarray, state):
+        n, csum, m, mmin = state or (0, 0.0, 0.0, np.inf)
+        ph = np.empty(len(x))
+        for i, xi in enumerate(x.tolist()):
+            n += 1
+            csum += xi
+            m += xi - csum / n - delta
+            mmin = min(mmin, m)
+            ph[i] = m - mmin
+        cols = {"value": x, "ph_stat": ph, "alarm": ph > lam}
+        return pd.DataFrame(cols), (n, csum, m, mmin)
 
-    return df.groupBy("series_id").applyInPandasWithState(
-        fn, _PH_OUT, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stream(df, scan, state_schema, _PH_OUT)
 
 
 def streaming_dedup_exact(

@@ -137,7 +137,6 @@ def test_holt_chunked_offset_and_gappy_ts(spark):
     finalize scans must be positional — offset/gappy ts still match."""
     from fdi_flow_spark.operators.recurrences import (
         double_exponential_smoothing_chunked,
-        holt_numpy,
     )
 
     rng = np.random.default_rng(32)
@@ -146,8 +145,8 @@ def test_holt_chunked_offset_and_gappy_ts(spark):
     out = collect_series(
         double_exponential_smoothing_chunked(df, alpha=0.3, beta=0.1, chunk_size=64)
     )
-    np.testing.assert_allclose(out["off"], holt_numpy(vals_off, 0.3, 0.1), rtol=1e-10)
-    np.testing.assert_allclose(out["gap"], holt_numpy(vals_gap, 0.3, 0.1), rtol=1e-10)
+    np.testing.assert_allclose(out["off"], ref_holt(vals_off, 0.3, 0.1), rtol=1e-10)
+    np.testing.assert_allclose(out["gap"], ref_holt(vals_gap, 0.3, 0.1), rtol=1e-10)
 
 
 def test_holt_chunked_lone_head_sample_raises(spark):
@@ -167,7 +166,6 @@ def test_holt_chunked_lone_head_sample_raises(spark):
 def test_holt_chunked_equals_sequential(spark):
     from fdi_flow_spark.operators.recurrences import (
         double_exponential_smoothing_chunked,
-        holt_numpy,
     )
 
     rng = np.random.default_rng(17)
@@ -178,7 +176,7 @@ def test_holt_chunked_equals_sequential(spark):
     )
     for sid, arr in arrays.items():
         np.testing.assert_allclose(
-            out[sid], holt_numpy(arr, 0.3, 0.1), rtol=1e-10, atol=1e-12
+            out[sid], ref_holt(arr, 0.3, 0.1), rtol=1e-10, atol=1e-12
         )
 
 
@@ -203,10 +201,7 @@ def test_kalman_chunked_equals_sequential(spark):
     """The gain-precomputed chunk-parallel Kalman matches the sequential
     kernel exactly (to float noise) across chunk boundaries, both with
     auto x0 (first sample) and explicit x0/p0."""
-    from fdi_flow_spark.operators.recurrences import (
-        kalman1d_numpy,
-        kalman_filter_1d_chunked,
-    )
+    from fdi_flow_spark.operators.recurrences import kalman_filter_1d_chunked
 
     rng = np.random.default_rng(21)
     arrays = {"a": rng.normal(0, 5, 500), "b": np.linspace(-3, 3, 257)}
@@ -214,14 +209,14 @@ def test_kalman_chunked_equals_sequential(spark):
     chunked = collect_series(kalman_filter_1d_chunked(df, q=0.5, r=2.0, chunk_size=64))
     for sid, arr in arrays.items():
         np.testing.assert_allclose(
-            chunked[sid], kalman1d_numpy(arr, 0.5, 2.0, None, 1.0), rtol=1e-11
+            chunked[sid], ref_kalman1d(arr, 0.5, 2.0, None, 1.0), rtol=1e-11
         )
     explicit = collect_series(
         kalman_filter_1d_chunked(df, q=1.5, r=0.7, x0=2.5, p0=4.0, chunk_size=48)
     )
     for sid, arr in arrays.items():
         np.testing.assert_allclose(
-            explicit[sid], kalman1d_numpy(arr, 1.5, 0.7, 2.5, 4.0), rtol=1e-11
+            explicit[sid], ref_kalman1d(arr, 1.5, 0.7, 2.5, 4.0), rtol=1e-11
         )
 
 
@@ -229,10 +224,7 @@ def test_kalman_chunked_offset_and_gappy_ts(spark):
     """The positional gains must be indexed by per-series RANK, not raw ts:
     a series starting at ts=1000 or with holes in ts must still match the
     sequential kernel row for row (order given by ts)."""
-    from fdi_flow_spark.operators.recurrences import (
-        kalman1d_numpy,
-        kalman_filter_1d_chunked,
-    )
+    from fdi_flow_spark.operators.recurrences import kalman_filter_1d_chunked
 
     rng = np.random.default_rng(99)
     vals_off = rng.normal(0, 3, 300)
@@ -246,10 +238,10 @@ def test_kalman_chunked_offset_and_gappy_ts(spark):
     # small q/r so the gain prefix spans several 64-row chunks
     out = collect_series(kalman_filter_1d_chunked(df, q=0.02, r=5.0, chunk_size=64))
     np.testing.assert_allclose(
-        out["off"], kalman1d_numpy(vals_off, 0.02, 5.0, None, 1.0), rtol=1e-11
+        out["off"], ref_kalman1d(vals_off, 0.02, 5.0, None, 1.0), rtol=1e-11
     )
     np.testing.assert_allclose(
-        out["gap"], kalman1d_numpy(vals_gap, 0.02, 5.0, None, 1.0), rtol=1e-11
+        out["gap"], ref_kalman1d(vals_gap, 0.02, 5.0, None, 1.0), rtol=1e-11
     )
 
 

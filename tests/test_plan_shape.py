@@ -530,3 +530,27 @@ def test_repeated_scan_audit_invariant(spark):
         worst = max(counts.values(), default=0)
         assert worst <= cap, (name, counts)
         assert worst < 3, (name, counts)  # the audit's global invariant
+
+
+def test_chunked_recurrences_run_three_python_passes(spark):
+    """The shared chunked driver runs exactly three Python passes per
+    recurrence — pass 1 summaries, the carry chain, pass 2 rescans — the
+    count each bespoke chunked scan had; it must not add a pass."""
+    from fdi_flow_spark.plans.registry import QUERIES
+
+    python_nodes = (
+        "FlatMapGroupsInPandas",
+        "MapInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "AggregateInPandas",
+        "WindowInPandas",
+        "FlatMapCoGroupsInPandas",
+    )
+    for name in ("ewma_chunked", "holt_chunked", "kalman1d_chunked"):
+        plan = _plan(QUERIES[name](spark, SF), "simple")
+        counts = {n: plan.count(n) for n in python_nodes}
+        assert counts == {**dict.fromkeys(python_nodes, 0), "FlatMapGroupsInPandas": 3}, (
+            name,
+            plan,
+        )

@@ -9,8 +9,12 @@ import tempfile
 import numpy as np
 import pytest
 
-from fdi_flow_spark.operators import exponential_smoothing, kalman_filter_1d
-from fdi_flow_spark.streaming import streaming_ewma, streaming_kalman_1d
+from fdi_flow_spark.operators import (
+    double_exponential_smoothing,
+    exponential_smoothing,
+    kalman_filter_1d,
+)
+from fdi_flow_spark.streaming import streaming_ewma, streaming_holt, streaming_kalman_1d
 
 from .conftest import make_long
 
@@ -70,18 +74,54 @@ def test_streaming_ewma_equals_batch(spark, chunked_stream_dir):
 
 
 def test_streaming_kalman_equals_batch(spark, chunked_stream_dir):
+    """Both inits — x0 from the first sample, and an explicit x0 with a
+    non-default p0 — carry across the micro-batch boundary exactly."""
     d, batch_df = chunked_stream_dir
-    got = _as_map(
-        _run_stream(spark, d, lambda s: streaming_kalman_1d(s, q=0.5, r=2.0))
+    for params in (dict(q=0.5, r=2.0), dict(q=1.5, r=0.7, x0=2.5, p0=4.0)):
+        got = _as_map(
+            _run_stream(spark, d, lambda s: streaming_kalman_1d(s, **params))
+        )
+        exp = _as_map(
+            kalman_filter_1d(batch_df, **params)
+            .toPandas()
+            .sort_values(["series_id", "ts"])
+        )
+        for sid in exp:
+            np.testing.assert_array_equal(got[sid], exp[sid])
+        spark.catalog.dropTempView("sink_tbl")
+
+
+@pytest.mark.parametrize(
+    "op, batch_op, match",
+    [
+        (
+            lambda s: streaming_ewma(s, alpha=1.5),
+            lambda b: exponential_smoothing(b, alpha=1.5),
+            "Alpha must be between 0 and 1",
+        ),
+        (
+            lambda s: streaming_holt(s, alpha=0.3, beta=0.0),
+            lambda b: double_exponential_smoothing(b, alpha=0.3, beta=0.0),
+            "Alpha and beta must be between 0 and 1",
+        ),
+    ],
+    ids=["ewma_alpha_1.5", "holt_beta_0"],
+)
+def test_streaming_rejects_parameters_batch_rejects(
+    spark, chunked_stream_dir, op, batch_op, match
+):
+    """Streaming and batch validate parameters in the same place, so a value
+    the batch operator rejects never builds a stream."""
+    d, batch_df = chunked_stream_dir
+    stream = (
+        spark.readStream.schema("series_id string, ts long, value double, batch int")
+        .parquet(d)
+        .select("series_id", "ts", "value")
     )
-    exp = _as_map(
-        kalman_filter_1d(batch_df, q=0.5, r=2.0)
-        .toPandas()
-        .sort_values(["series_id", "ts"])
-    )
-    for sid in exp:
-        np.testing.assert_array_equal(got[sid], exp[sid])
-    spark.catalog.dropTempView("sink_tbl")
+    with pytest.raises(ValueError, match=match):
+        batch_op(batch_df)
+    with pytest.raises(ValueError, match=match):
+        op(stream)
 
 
 def test_streaming_observer_equals_batch(spark):
@@ -154,6 +194,24 @@ def test_streaming_holt_equals_batch(spark, chunked_stream_dir):
     for sid in exp:
         np.testing.assert_array_equal(got[sid], exp[sid])
     spark.catalog.dropTempView("sink_tbl")
+
+
+def test_streaming_holt_holds_lone_first_sample(spark):
+    """Holt's init reads x[1]: a micro-batch carrying only the first sample
+    emits nothing, the sample is held in state, and the stream still equals
+    the batch operator once the second sample arrives."""
+    rng = np.random.default_rng(5)
+    df = make_long(spark, {"a": rng.normal(0, 1, 12)})
+    d = tempfile.mkdtemp(prefix="fdi_holt_held_")
+    try:
+        for b, cond in enumerate(["ts < 1", "ts = 1", "ts > 1"]):
+            df.where(cond).coalesce(1).write.parquet(f"{d}/batch={b}")
+        got = _as_map(_run_stream(spark, d, lambda s: streaming_holt(s)))
+        exp = _as_map(double_exponential_smoothing(df).toPandas().sort_values("ts"))
+        np.testing.assert_array_equal(got["a"], exp["a"])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        spark.catalog.dropTempView("sink_tbl")
 
 
 def test_streaming_dedup_keeps_first_occurrence(spark):
