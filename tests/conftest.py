@@ -13,6 +13,27 @@ def spark() -> SparkSession:
     s.stop()
 
 
+@pytest.fixture()
+def restored_conf(spark):
+    """Snapshot the shared session's SQL conf and put it back afterwards.
+
+    ``get_spark`` on a live session re-applies its builder options to it
+    (PySpark's ``getOrCreate``), so a test that calls it would otherwise
+    leave, say, 32 shuffle partitions behind for every later test file.
+    The JVM conf is restored directly because ``getOrCreate`` also writes
+    keys (``spark.app.name``, ...) that ``spark.conf.set`` refuses."""
+    before = spark.conf.getAll
+    yield spark
+    jconf = spark._jsparkSession.sessionState().conf()
+    after = spark.conf.getAll
+    for k in after.keys() - before.keys():
+        jconf.unsetConf(k)
+    for k, v in before.items():
+        if after.get(k) != v:
+            jconf.setConfString(k, v)
+    assert spark.conf.getAll == before
+
+
 def make_long(spark: SparkSession, series: dict[str, np.ndarray]):
     """Build a long-format (series_id, ts, value) frame from numpy arrays."""
     rows = []

@@ -91,6 +91,56 @@ def test_streaming_kalman_equals_batch(spark, chunked_stream_dir):
         spark.catalog.dropTempView("sink_tbl")
 
 
+def _drain_kalman(spark, src_dir, out_dir, ckpt):
+    """One availableNow drain of ``src_dir`` through the Kalman stream into
+    a parquet sink, from (or into) the checkpoint ``ckpt``."""
+    stream = (
+        spark.readStream.schema("series_id string, ts long, value double, batch int")
+        .parquet(src_dir)
+        .select("series_id", "ts", "value")
+    )
+    q = (
+        streaming_kalman_1d(stream, q=0.5, r=2.0)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return q.lastProgress.stateOperators[0].numStateStoreInstances
+
+
+def test_streaming_state_store_count_fixed_by_checkpoint(
+    spark, chunked_stream_dir, restored_conf
+):
+    """A checkpoint started with 8 state stores keeps them when restarted
+    under the session default, and the carried state stays bit-exact; a
+    fresh stream gets one store per task slot."""
+    d, batch_df = chunked_stream_dir
+    src, out, ckpt = f"{d}/src", f"{d}/out", f"{d}/ckpt"
+    shutil.copytree(f"{d}/batch=0", f"{src}/batch=0")
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    assert _drain_kalman(spark, src, out, ckpt) == 8
+
+    spark.conf.set("spark.sql.shuffle.partitions", default)
+    shutil.copytree(f"{d}/batch=1", f"{src}/batch=1")
+    assert _drain_kalman(spark, src, out, ckpt) == 8
+
+    got = _as_map(spark.read.parquet(out).toPandas().sort_values(["series_id", "ts"]))
+    exp = _as_map(
+        kalman_filter_1d(batch_df, q=0.5, r=2.0).toPandas().sort_values(["series_id", "ts"])
+    )
+    assert got.keys() == exp.keys()
+    for sid in exp:
+        np.testing.assert_array_equal(got[sid], exp[sid])
+
+    fresh = _drain_kalman(spark, src, f"{d}/out_fresh", f"{d}/ckpt_fresh")
+    assert fresh == spark.sparkContext.defaultParallelism
+
+
 @pytest.mark.parametrize(
     "op, batch_op, match",
     [
