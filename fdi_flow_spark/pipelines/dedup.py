@@ -4,10 +4,11 @@ SURVEY.md §2.9): exact, n-gram Jaccard, MinHash-LSH, SimHash.
 Scale notes (the whole point of these ops):
 - exact: one hash-aggregate on md5(text) — shuffles 16-byte digests, never
   the documents themselves.
-- n-gram Jaccard: inverted-index self-join on *distinct* shingles — the
-  classic candidate-pair generation; common-shingle counting is a
-  map-side-combinable aggregate. Hot shingles (stop-bigrams) are the skew
-  axis; ``max_doc_freq`` drops them (standard df-pruning) before the join.
+- n-gram Jaccard / containment: inverted-index self-join on *distinct*
+  shingle hashes — the classic candidate-pair generation; common-shingle
+  counting is a map-side-combinable aggregate. Hot shingles (stop-bigrams)
+  are the skew axis; the exact joins' rarest-first AllPairs prefix takes
+  them last, and the containment screens drop them (``max_df``).
 - MinHash: permutation family ``h_i(x) = (a_i*x + b_i) mod p`` over shingle
   hashes, banded into LSH buckets; only bucket-colliding pairs are scored.
 - SimHash: 64-bit signed-bit-vote fingerprint; near-dups differ in few bits.
@@ -15,6 +16,9 @@ Scale notes (the whole point of these ops):
 
 from __future__ import annotations
 
+import operator
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fdi_flow_spark.core.partitioning import ensure_min_parallelism
@@ -74,6 +78,49 @@ def _char_ngrams(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFra
     )
 
 
+def _check_unit(unit: str) -> None:
+    if unit not in ("word", "char"):
+        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
+
+
+def _shingle_grams(
+    docs: DataFrame, id_col: str, text_col: str, n: int, unit: str, char_k: int
+) -> DataFrame:
+    """``(id, _g)``: each doc's DISTINCT shingle strings as one array —
+    word ``n``-grams (``unit='word'``) or character ``char_k``-grams
+    (``unit='char'``); any other ``unit`` raises ``ValueError``. Row filter
+    matches :func:`_word_ngrams` / :func:`_char_ngrams`: docs that yield no
+    shingle emit no row."""
+    _check_unit(unit)
+    docs = ensure_min_parallelism(docs, id_col)
+    if unit == "char":
+        # filter length >= k FIRST (see _char_ngrams: sequence(1, 0) counts
+        # backwards)
+        grams = F.expr(
+            f"""
+            array_distinct(transform(
+              sequence(1, length({text_col}) - {char_k - 1}),
+              i -> substring({text_col}, i, {char_k})))
+            """
+        )
+        return docs.where(F.length(F.col(text_col)) >= char_k).select(
+            F.col(id_col).alias("id"), grams.alias("_g")
+        )
+    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: F.length(t) > 0)
+    grams = F.expr(
+        f"""
+        array_distinct(transform(
+          sequence(1, greatest(0, size(_toks) - {n - 1})),
+          i -> array_join(slice(_toks, i, {n}), ' ')))
+        """
+    )
+    return (
+        docs.select(F.col(id_col).alias("id"), toks.alias("_toks"))
+        .where(F.size("_toks") >= n)
+        .select("id", grams.alias("_g"))
+    )
+
+
 def _shingle_hash_arrays(
     docs: DataFrame,
     id_col: str,
@@ -91,64 +138,33 @@ def _shingle_hash_arrays(
     shingles are born in one row). ``arr`` keeps in-doc hash collisions
     between distinct shingles exactly like collect_list did (array_distinct
     runs on shingle STRINGS, before hashing); ``ns`` = size of the distinct
-    shingle set — the per-doc count the prefix filters previously recomputed
-    with an unordered count window over the id exchange. Row filter matches
-    :func:`_word_ngrams` / :func:`_char_ngrams`: docs that yield no shingle
-    emit no row."""
-    docs = ensure_min_parallelism(docs, id_col)
-    if unit == "char":
-        grams = F.expr(
-            f"""
-            array_distinct(transform(
-              sequence(1, length({text_col}) - {char_k - 1}),
-              i -> substring({text_col}, i, {char_k})))
-            """
-        )
-        base = docs.where(F.length(F.col(text_col)) >= char_k).select(
-            F.col(id_col).alias("id"), grams.alias("_g")
-        )
-    else:
-        toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: F.length(t) > 0)
-        grams = F.expr(
-            f"""
-            array_distinct(transform(
-              sequence(1, greatest(0, size(_toks) - {n - 1})),
-              i -> array_join(slice(_toks, i, {n}), ' ')))
-            """
-        )
-        base = (
-            docs.select(F.col(id_col).alias("id"), toks.alias("_toks"))
-            .where(F.size("_toks") >= n)
-            .select("id", grams.alias("_g"))
-        )
+    shingle set, so the prefix filters need no count window."""
     harr = F.sort_array(F.transform(F.col("_g"), lambda s: F.xxhash64(s)))
-    return base.select("id", F.size("_g").alias("ns"), harr.alias("arr"))
+    return _shingle_grams(docs, id_col, text_col, n, unit, char_k).select(
+        "id", F.size("_g").alias("ns"), harr.alias("arr")
+    )
 
 
 def content_digests(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """``(_mid, _dg)`` — one sha2-256 content digest per document, eagerly
-    localCheckpoint'd (MEMORY_AND_DISK) so every downstream consumer of the
-    exact-duplicate collapse (group-min reps, the expansion map, the
-    representative semi-join) reads the materialized table instead of
-    re-scanning the corpus. Shared by :func:`ngram_jaccard_pairs` and
-    :func:`containment_pairs` via their ``digest_table`` parameter (r14,
-    r13 VERDICT item 4: each call re-checkpointing its own digest table
-    over the same input cost ~0.5-1 s per call at sf0.1 — callers that run
-    both joins over one corpus build this once and pass it to both).
+    localCheckpoint'd (MEMORY_AND_DISK) so every consumer of the
+    exact-duplicate collapse reads the materialized table instead of
+    re-scanning the corpus. :func:`exact_dup_members` builds its map from
+    it; pass a prebuilt table there as ``digest_table`` to pay the digest
+    scan once per corpus (the registry caches the resulting map per
+    corpus and hands it to both exact pair joins as ``dup_members``).
 
     sha-256, not md5 (r14 ADVICE): md5 collisions are adversarially
     constructible (chosen-prefix), and a crafted pair in an untrusted
     corpus would silently merge two distinct documents into one exact-dup
     group — reported jaccard/containment 1.0, second text never shingled.
     """
-    from pyspark import StorageLevel as _SL
-
     return docs.select(
         F.col(id_col).alias("_mid"),
         F.sha2(F.col(text_col), 256).alias("_dg"),
-    ).localCheckpoint(eager=True, storageLevel=_SL.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def exact_dup_members(
@@ -166,8 +182,6 @@ def exact_dup_members(
     twin-duplication fixture (every doc 100x) yields the full corpus,
     exactly where the collapse pays for itself. Build from a prebuilt
     :func:`content_digests` table when available."""
-    from pyspark import StorageLevel as _SL
-
     dg = (
         digest_table
         if digest_table is not None
@@ -179,7 +193,7 @@ def exact_dup_members(
     return (
         dg.join(groups.where(F.col("_gc") > 1), "_dg")
         .select(F.col("_rid").alias("_rep"), F.col("_mid"))
-        .localCheckpoint(eager=True, storageLevel=_SL.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -193,6 +207,192 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
+# ------------------------------------------ exact set-similarity pair joins
+#
+# ngram_jaccard_pairs and containment_pairs run one path:
+# _exact_pair_inputs (twin collapse -> hash-array checkpoint -> inverted
+# stream), candidates (a measure-specific join over _rarest_prefix, or the
+# unpruned _all_shingle_pairs), _verify_pairs, _expand_twins. Only the pair
+# predicate, prefix length, count bound, score and pair orientation differ.
+
+
+def _exact_pair_inputs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    unit: str,
+    char_k: int,
+    collapse_exact: bool,
+    dup_members: DataFrame | None,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """``(arrays, shingles, mem)`` — the shared front half of the exact
+    pair joins.
+
+    Collapse (``collapse_exact``, r13, LOSSLESS): exact-duplicate groups
+    defeat every AllPairs filter (identical texts share ALL shingles, so a
+    g-sized group costs C(g,2) full verifications — 4,950 verify pairs per
+    document at the x100 twin rehearsal). Identical text implies an
+    identical shingle SET, and both measures depend only on the sets, so
+    non-representative twins (``mem``: :func:`exact_dup_members`, or the
+    prebuilt ``dup_members``) are dropped before shingling and
+    :func:`_expand_twins` restores their pairs bit-for-bit. The state is
+    duplicate-mass-sized (r14): the twin drop is an anti-join against the
+    twin set only. Adaptive identity skip: with no duplicate groups the
+    collapse is an algebraic identity, ``mem`` is ``None`` and the direct
+    plan runs.
+
+    ``arrays`` = :func:`_shingle_hash_arrays` of the surviving docs,
+    materialized ONCE (r14 array form): dfreq, prefix rank and both verify
+    sides derive from this checkpoint. Shingles are 8-byte xxhash64 keys
+    (collisions ~1e-11 at realistic cardinalities). SERIALIZED storage
+    (r11, the minhash signature-checkpoint lesson): long-array rows held as
+    deserialized JVM objects are ~10x their bytes — the difference between
+    fitting and OOMing the single-JVM x100 rehearsal. ``shingles`` =
+    ``(id, ns, shingle)``, the inverted-index stream re-derived map-side
+    from the checkpoint."""
+    _check_unit(unit)  # before the collapse's eager checkpoints run jobs
+    mem = None
+    if collapse_exact:
+        mem = (
+            dup_members
+            if dup_members is not None
+            else exact_dup_members(docs, id_col, text_col)
+        )
+        if mem.take(1):
+            twins = mem.where(F.col("_mid") != F.col("_rep"))
+            docs = docs.join(
+                twins.select(F.col("_mid").alias(id_col)), id_col, "left_anti"
+            )
+        else:
+            mem = None
+    arrays = _shingle_hash_arrays(docs, id_col, text_col, n, unit, char_k).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
+    shingles = arrays.select("id", "ns", F.explode("arr").alias("shingle"))
+    return arrays, shingles, mem
+
+
+def _rarest_prefix(shingles: DataFrame, p) -> DataFrame:
+    """``(id, shingle, ns, _p)``: each doc's first ``_p = p`` shingles in
+    the global (document frequency ASC, shingle) order — the AllPairs
+    prefix (Bayardo et al., WWW 2007). Rare-first is also the anti-skew
+    order: hot shingles are the last to enter a prefix."""
+    dfreq = shingles.groupBy("shingle").agg(F.count("*").alias("_df"))
+    rank = F.row_number().over(
+        Window.partitionBy("id").orderBy(F.col("_df").asc(), F.col("shingle").asc())
+    )
+    return (
+        shingles.join(dfreq, "shingle")
+        .withColumn("_r", rank)
+        .withColumn("_p", p)
+        .where(F.col("_r") <= F.col("_p"))
+        .select("id", "shingle", "ns", "_p")
+    )
+
+
+def _all_shingle_pairs(shingles: DataFrame, pair) -> DataFrame:
+    """Unpruned candidates ``(id_a, id_b)``: every pair sharing a shingle
+    with ``pair(id_a, id_b)`` — the reference the prefix filters are
+    proven lossless against."""
+    inv = shingles.select("id", "shingle")
+    a, b = inv.alias("a"), inv.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & pair(F.col("a.id"), F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _jaccard(inter, na, nb):
+    return inter / (na + nb - inter)
+
+
+def _containment(inter, na, nb):
+    return inter / na
+
+
+def _verify_pairs(
+    cand: DataFrame, arrays: DataFrame, score, threshold: float, name: str
+) -> DataFrame:
+    """``(id_a, id_b, <name>)``: candidates whose exact
+    ``score(|A ∩ B|, |A|, |B|)`` over the per-doc sorted hash arrays
+    reaches ``threshold``, rounded to 6 dp for cross-engine hash parity.
+    The arrays table grows with the corpus, so both verify joins shuffle
+    (scale-safe). Hash join, not sort-merge: sorting wide hash-array rows
+    by id buys nothing, and the candidate side is the small build side."""
+    aa = arrays.select(F.col("id").alias("id_a"), F.col("arr").alias("_arr_a"))
+    ab = arrays.select(F.col("id").alias("id_b"), F.col("arr").alias("_arr_b"))
+    s = score(
+        F.size(F.array_intersect("_arr_a", "_arr_b")),
+        F.size("_arr_a"),
+        F.size("_arr_b"),
+    )
+    return (
+        cand.join(aa.hint("shuffle_hash"), "id_a")
+        .join(ab.hint("shuffle_hash"), "id_b")
+        .where(s >= threshold)
+        .select("id_a", "id_b", F.round(s, 6).alias(name))
+    )
+
+
+def _expand_twins(
+    pairs: DataFrame,
+    mem: DataFrame | None,
+    arrays: DataFrame,
+    threshold: float,
+    pair,
+    reorder: bool,
+) -> DataFrame:
+    """Expand representative pairs back to member pairs (the collapse's
+    second half; identity when ``mem`` is ``None``).
+
+    Cross-group pairs inherit the representative score verbatim (identical
+    sets, identical float), through LEFT joins with identity fallback
+    (r14): ``mem`` holds only dup-group members, so a pair touching no
+    representative expands to itself. Member ids interleave across
+    groups, so unordered pairs are re-ordered (``reorder``). Same-digest
+    pairs ``pair(x, y)`` score exactly 1.0 — but only for texts that yield
+    >= 1 shingle (``arrays`` holds precisely those representatives), and
+    none when ``threshold > 1``."""
+    if mem is None:
+        return pairs
+    score = pairs.columns[2]
+    ma = mem.select(F.col("_rep").alias("id_a"), F.col("_mid").alias("_xa"))
+    mb = mem.select(F.col("_rep").alias("id_b"), F.col("_mid").alias("_xb"))
+    xa = F.coalesce("_xa", F.col("id_a"))
+    xb = F.coalesce("_xb", F.col("id_b"))
+    if reorder:
+        xa, xb = F.least(xa, xb), F.greatest(xa, xb)
+    cross = (
+        pairs.join(ma, "id_a", "left")
+        .join(mb, "id_b", "left")
+        .select(xa.alias("id_a"), xb.alias("id_b"), score)
+    )
+    if threshold > 1.0:  # degenerate caller: identical pairs no longer pass
+        return cross
+    eligible = arrays.select(F.col("id").alias("_erep"))
+    intra = (
+        mem.alias("x")
+        .join(
+            mem.alias("y"),
+            (F.col("x._rep") == F.col("y._rep"))
+            & pair(F.col("x._mid"), F.col("y._mid")),
+        )
+        .join(eligible, F.col("x._rep") == F.col("_erep"), "left_semi")
+        .select(
+            F.col("x._mid").alias("id_a"),
+            F.col("y._mid").alias("id_b"),
+            F.round(F.lit(1.0), 6).alias(score),
+        )
+    )
+    return cross.unionByName(intra)
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -202,9 +402,7 @@ def ngram_jaccard_pairs(
     prefix_filter: bool = True,
     unit: str = "word",
     char_k: int = 12,
-    broadcast_verify: bool = False,
     collapse_exact: bool = True,
-    digest_table: DataFrame | None = None,
     dup_members: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard similarity >= threshold.
@@ -215,106 +413,21 @@ def ngram_jaccard_pairs(
     6 dp for cross-engine hash parity.
 
     Scale path (``prefix_filter=True``, lossless): the AllPairs/PPJoin prefix
-    filter — shingles are globally ordered by (document frequency ASC,
-    shingle), each doc joins only on its first ``|d| - ceil(t*|d|) + 1``
-    rarest shingles (any pair with J >= t must collide there), plus the
-    Jaccard length filter ``t*|a| <= |b|``. Candidates are then verified
-    exactly with one ``array_intersect`` over the per-doc sorted shingle
-    arrays — the quadratic hot-shingle blowup of the naive inverted-index
-    join never materializes.
+    filter — each doc joins only on its rarest shingles (any pair with
+    J >= t must collide there), plus the Jaccard length filter
+    ``t*|a| <= |b|``. Candidates are then verified exactly with one
+    ``array_intersect`` over the per-doc sorted shingle arrays — the
+    quadratic hot-shingle blowup of the naive inverted-index join never
+    materializes.
 
-    ``collapse_exact`` (r13, default on — LOSSLESS): exact-duplicate groups
-    defeat every AllPairs filter (identical texts share ALL shingles, so
-    the prefix/length filters prune nothing and a g-sized group costs
-    C(g,2) full verifications — at the x100 twin rehearsal that is 4,950
-    verify pairs per document). Identical text implies an identical
-    shingle SET, and set Jaccard depends only on the sets, so collapsing
-    to one representative per sha2-256(text) digest BEFORE shingling
-    (r14 ADVICE: sha-256, not md5 — md5 collisions are adversarially
-    constructible, and a chosen-prefix pair in an untrusted corpus would
-    silently merge two distinct documents into one exact-dup group), running
-    AllPairs over representatives, and expanding pairs back afterward
-    (cross-group pairs inherit the representative pair's jaccard verbatim;
-    same-digest pairs are exactly 1.0, emitted only when the text yields
-    >= 1 shingle, matching the shingling universe) reproduces the full
-    output bit-for-bit while the verify cost drops from O(sum g^2) to the
-    distinct-text pair space. This is the dedup_components_grouped insight
-    (exact-collapse first) made output-preserving.
-
-    ``digest_table`` (r14, r13 VERDICT item 4): a prebuilt
-    :func:`content_digests` table for this exact ``docs`` input. When
-    given, the collapse reads it instead of checkpointing its own — a
-    caller running several exact pair joins over one corpus (this and
-    :func:`containment_pairs`) pays the digest scan once.
-
-    Duplicate-mass-sized collapse state (r14 rework): the r13 collapse
-    carried corpus-sized machinery per call (a reps aggregate over every
-    digest, a corpus-wide expansion map, a representative semi-join and a
-    full-mem self-join — the measured ~0.5-1 s at sf0.1) even when the
-    corpus held almost no twins. The state is now
-    :func:`exact_dup_members` — members of MULTI-member digest groups
-    only — so the twin drop is an anti-join against the twin set, the
-    expansion legs are LEFT joins with identity fallback, and the intra
-    leg self-joins only actual twin groups: a corpus with 8 twins among
-    5000 docs pays ~16 rows of collapse state, while the x100
-    twin-duplication fixture degenerates to the full r13 collapse exactly
-    where it wins (>10 h -> 37 s). When the corpus has NO duplicate
-    groups the map is empty and the direct plan runs — bit-identical
-    output on every path. ``dup_members`` accepts a prebuilt (cached)
-    map; ``digest_table`` feeds the map build when only digests are
-    cached.
+    ``collapse_exact`` (default on, lossless) runs AllPairs over one
+    representative per sha2-256 text digest and expands pairs back
+    afterward (:func:`_exact_pair_inputs`); ``dup_members`` accepts a
+    prebuilt :func:`exact_dup_members` map for this ``docs`` input.
     """
-    if collapse_exact:
-        # ONE corpus scan builds the dup-member map (r14: members of
-        # multi-member digest groups ONLY — the collapse state rides on
-        # duplicate mass, not corpus size); every downstream consumer
-        # (the twin anti-join, both expansion legs, the intra self-join)
-        # reads the checkpoint — without the cut the scan audit counted 8
-        # corpus scans through these paths.
-        mem = (
-            dup_members
-            if dup_members is not None
-            else exact_dup_members(docs, id_col, text_col, digest_table)
-        )
-        # adaptive identity skip: no duplicate groups -> the collapse is
-        # an algebraic identity; run the direct plan (bit-identical)
-        collapse_exact = bool(mem.take(1))
-    if collapse_exact:
-        # drop non-representative twins; singletons and reps stay
-        work = docs.join(
-            mem.where(F.col("_mid") != F.col("_rep")).select(
-                F.col("_mid").alias(id_col)
-            ),
-            id_col,
-            "left_anti",
-        )
-    else:
-        work = docs
-    # Join/shuffle on 8-byte shingle hashes instead of strings (xxhash64
-    # collisions are ~1e-11 at realistic shingle cardinalities — the exact
-    # intersection count is then computed over hashed arrays).
-    # Materialize ONCE, in ARRAY form (r14): the per-doc sorted hash arrays
-    # are built in array land (zero shuffle) and every downstream consumer —
-    # dfreq, prefix rank, both verify sides — derives from this checkpoint.
-    # The pre-r14 shape checkpointed the EXPLODED (id, hash) stream and
-    # rebuilt the verify arrays with groupBy(id).collect_list: a full
-    # corpus-shingle Exchange (paid once per verify side in the physical
-    # plan) reassembling rows that were born together, plus an unordered
-    # count window recomputing per-doc sizes the arrays already knew.
-    from pyspark import StorageLevel
-
-    # SERIALIZED storage (r11, the minhash signature-checkpoint lesson):
-    # long-array rows held as deserialized JVM objects are ~10x their
-    # bytes; the serialized block is the difference between fitting and
-    # OOMing the single-JVM x100 rehearsal, and cuts GC pressure on the
-    # wide verify joins at every scale.
-    arrays = _shingle_hash_arrays(work, id_col, text_col, n, unit, char_k).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    arrays, shingles, mem = _exact_pair_inputs(
+        docs, id_col, text_col, n, unit, char_k, collapse_exact, dup_members
     )
-    # the inverted-index stream, re-derived map-side from the checkpoint
-    # (explode is CPU-only; ns rides along so no count window is needed)
-    shingles = arrays.select("id", "ns", F.explode("arr").alias("shingle"))
-
     if prefix_filter:
         # Extended-prefix AllPairs: keep each doc's beta-fraction rarest
         # shingles (beta > 1 - t keeps the >=1-collision guarantee) and use
@@ -325,24 +438,9 @@ def ngram_jaccard_pairs(
         # bound is in the tens — the pair aggregate itself kills the noise
         # pairs, and only near-matches reach exact verification.
         beta = max(0.8, 1.0 - threshold + 0.05)
-        dfreq = shingles.groupBy("shingle").agg(F.count("*").alias("_df"))
-        # ns arrives with the explode (size of the checkpointed array) —
-        # the pre-r14 unordered count window over the id exchange is gone.
-        ranked = (
-            shingles.join(dfreq, "shingle")
-            .withColumn(
-                "_r",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.col("_df").asc(), F.col("shingle").asc())
-                ),
-            )
-            .withColumn("_p", F.ceil(F.lit(beta) * F.col("ns")))
-            .where(F.col("_r") <= F.col("_p"))
-            .select("id", "shingle", "ns", "_p")
-        )
+        ranked = _rarest_prefix(shingles, F.ceil(F.lit(beta) * F.col("ns")))
         a, b = ranked.alias("a"), ranked.alias("b")
         na, nb = F.col("a.ns"), F.col("b.ns")
-        alpha = F.ceil(F.lit(threshold / (1.0 + threshold)) * (na + nb))
         cand = (
             a.join(
                 b,
@@ -372,77 +470,9 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b")
         )
     else:
-        inv = shingles.select("id", "shingle")
-        a, b = inv.alias("a"), inv.alias("b")
-        cand = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
-    aa = arrays.select(F.col("id").alias("id_a"), F.col("arr").alias("_arr_a"))
-    ab = arrays.select(F.col("id").alias("id_b"), F.col("arr").alias("_arr_b"))
-    inter = F.size(F.array_intersect("_arr_a", "_arr_b"))
-    na, nb = F.size("_arr_a"), F.size("_arr_b")
-    jac = inter / (na + nb - inter)
-    # The per-doc hash-array table grows with the corpus, so the default
-    # verify join shuffles (scale-safe). Hash join, not sort-merge: sorting
-    # wide hash-array rows by id buys nothing, and the candidate side is
-    # always the small build side. broadcast_verify=True is the bench-scale
-    # opt-in for corpora known to fit in executor memory.
-    if broadcast_verify:
-        aa, ab = F.broadcast(aa), F.broadcast(ab)
-    else:
-        aa, ab = aa.hint("shuffle_hash"), ab.hint("shuffle_hash")
-    pairs = (
-        cand.join(aa, "id_a")
-        .join(ab, "id_b")
-        .where(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-    )
-    if not collapse_exact:
-        return pairs
-    # Expand representative pairs back to member pairs. Cross-group pairs
-    # inherit the representative jaccard verbatim (identical sets, identical
-    # float); member ids interleave across groups, so re-order each pair.
-    ma = mem.select(F.col("_rep").alias("id_a"), F.col("_mid").alias("_xa"))
-    mb = mem.select(F.col("_rep").alias("id_b"), F.col("_mid").alias("_xb"))
-    # LEFT joins with identity fallback (r14): mem holds only dup-group
-    # members, so a pair not touching a dup representative expands to
-    # itself — the join state is duplicate-mass-sized, not corpus-sized.
-    xa = F.coalesce("_xa", F.col("id_a"))
-    xb = F.coalesce("_xb", F.col("id_b"))
-    cross = (
-        pairs.join(ma, "id_a", "left")
-        .join(mb, "id_b", "left")
-        .select(
-            F.least(xa, xb).alias("id_a"),
-            F.greatest(xa, xb).alias("id_b"),
-            "jaccard",
-        )
-    )
-    # Same-digest pairs are exactly 1.0 — but only for texts that produce
-    # >= 1 shingle (shorter texts never enter the shingling universe, and
-    # the per-pair path would likewise never emit them). `arrays` holds
-    # precisely the representatives with non-empty shingle sets.
-    eligible = arrays.select(F.col("id").alias("_erep"))
-    intra = (
-        mem.alias("x")
-        .join(
-            mem.alias("y"),
-            (F.col("x._rep") == F.col("y._rep"))
-            & (F.col("x._mid") < F.col("y._mid")),
-        )
-        .join(eligible, F.col("x._rep") == F.col("_erep"), "left_semi")
-        .select(
-            F.col("x._mid").alias("id_a"),
-            F.col("y._mid").alias("id_b"),
-            F.round(F.lit(1.0), 6).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:  # degenerate caller: identical pairs no longer pass
-        return cross
-    return cross.unionByName(intra)
+        cand = _all_shingle_pairs(shingles, operator.lt)
+    pairs = _verify_pairs(cand, arrays, _jaccard, threshold, "jaccard")
+    return _expand_twins(pairs, mem, arrays, threshold, operator.lt, reorder=True)
 
 
 def containment_pairs(
@@ -454,9 +484,7 @@ def containment_pairs(
     prefix_filter: bool = True,
     unit: str = "char",
     char_k: int = 12,
-    broadcast_verify: bool = False,
     collapse_exact: bool = True,
-    digest_table: DataFrame | None = None,
     dup_members: DataFrame | None = None,
 ) -> DataFrame:
     """Directed near-clone pairs by shingle-set CONTAINMENT (r10, §2.9
@@ -470,114 +498,48 @@ def containment_pairs(
 
     Scale path (``prefix_filter=True``, lossless): the one-sided prefix
     filter — if ``C(A->B) >= t`` then ``|A ∩ B| >= ceil(t*|A|)``, so among
-    A's ``|A| - ceil(t*|A|) + 1`` globally RAREST shingles (document
-    frequency ASC, shingle) at least one must also be in B. Candidates are
-    therefore prefix(A) joined against the FULL inverted index on 8-byte
-    xxhash64 shingle keys, then verified exactly with one
-    ``array_intersect`` over per-doc sorted hash arrays (same verify shape
-    and collision budget as the Jaccard path). No length filter can prune
-    the B side (containment is one-sided: a tiny A can be contained in any
-    B), so the B-side skew axis is hot shingles — at high thresholds the
-    prefix is small and df-rarest, which is exactly the anti-skew order.
+    A's ``|A| - ceil(t*|A|) + 1`` globally RAREST shingles at least one
+    must also be in B. Candidates are therefore prefix(A) joined against
+    the FULL inverted index, then verified exactly like the Jaccard path.
+    No length filter can prune the B side (a tiny A can be contained in
+    any B), so the B-side skew axis is hot shingles — at high thresholds
+    the prefix is small and df-rarest, which is exactly the anti-skew
+    order.
 
-    ``collapse_exact`` (r13, default on — LOSSLESS, the
-    ``ngram_jaccard_pairs`` collapse applied to the directed join):
-    containment depends only on the shingle SETS, and identical text means
-    an identical set, so exact-duplicate groups are collapsed to one
-    sha2-256(text) representative before shingling (r14 ADVICE: collision-
-    resistant against adversarial corpus inputs, unlike md5) and the
-    directed pairs are
-    expanded back afterward — cross-group ordered pairs inherit the
-    representative containment verbatim (both directions arrive as
-    separate representative rows), same-digest ordered pairs are exactly
-    1.0 when the text shingles. Without it a g-sized twin group costs
-    g*(g-1) full verifications that no filter can prune.
-
-    ``digest_table`` (r14, r13 VERDICT item 4): a prebuilt
-    :func:`content_digests` table for this exact ``docs`` input — shared
-    with :func:`ngram_jaccard_pairs` so a caller running both exact pair
-    joins over one corpus pays the digest scan + checkpoint once.
-    ``dup_members`` / the duplicate-mass-sized collapse state and the
-    adaptive identity skip follow the ``ngram_jaccard_pairs`` contract:
-    no duplicate groups -> the collapse is a no-op and the direct plan
-    runs, bit-identical.
+    ``collapse_exact`` / ``dup_members``: as in :func:`ngram_jaccard_pairs`;
+    cross-group directed pairs keep their orientation (both directions
+    arrive as separate representative rows), and same-digest pairs appear
+    in both directions at 1.0.
     """
-    if collapse_exact:
-        # the dup-member map (duplicate-mass-sized; see the jaccard twin)
-        mem = (
-            dup_members
-            if dup_members is not None
-            else exact_dup_members(docs, id_col, text_col, digest_table)
-        )
-        collapse_exact = bool(mem.take(1))
-    if collapse_exact:
-        work = docs.join(
-            mem.where(F.col("_mid") != F.col("_rep")).select(
-                F.col("_mid").alias(id_col)
-            ),
-            id_col,
-            "left_anti",
-        )
-    else:
-        work = docs
-    # One materialization feeds sizes/arrays/dfreq/prefix/both join sides —
-    # same cut as ngram_jaccard_pairs, and same r14 ARRAY-form rework: the
-    # per-doc sorted hash arrays are built in array land (zero shuffle),
-    # killing the groupBy(id).collect_list Exchange that reassembled the
-    # exploded stream and the unordered count window that recomputed ns.
-    from pyspark import StorageLevel
-
-    # SERIALIZED storage (r11, the minhash signature-checkpoint lesson):
-    # long-array rows held as deserialized JVM objects are ~10x their
-    # bytes; the serialized block is the difference between fitting and
-    # OOMing the single-JVM x100 rehearsal, and cuts GC pressure on the
-    # wide verify joins at every scale.
-    arrays = _shingle_hash_arrays(work, id_col, text_col, n, unit, char_k).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    arrays, shingles, mem = _exact_pair_inputs(
+        docs, id_col, text_col, n, unit, char_k, collapse_exact, dup_members
     )
-    shingles = arrays.select("id", "ns", F.explode("arr").alias("shingle"))
-    inv = shingles.select("id", "shingle")
-
     if prefix_filter:
-        dfreq = shingles.groupBy("shingle").agg(F.count("*").alias("_df"))
-        # EXTENDED prefix + count bound (r15, the Jaccard twin's design
-        # brought to the directed join; guide §2.3 "shuffle fewer bytes" —
-        # here "verify fewer pairs"). The minimal prefix p = ns - ceil(t*ns)
-        # + 1 guarantees >= 1 collision, so every pair sharing ONE rare
-        # shingle reached the exact array_intersect verify: measured at
+        # EXTENDED prefix + count bound (r15). The minimal prefix
+        # p = ns - ceil(t*ns) + 1 guarantees >= 1 collision, so every pair
+        # sharing ONE rare shingle reached the exact verify: measured at
         # sf0.1, 1.57M candidate pairs for 482 true pairs, and the verify
-        # joins (wide array payloads + per-pair intersects) were ~60% of
-        # the query's warm cost. Keeping the LARGER prefix
-        # p' = ns - ceil(beta*t*ns) + 1 (beta < 1) buys a SOUND pair-count
-        # bound: if C(A->B) >= t then |A∩B| >= ceil(t*ns_a), and at most
-        # ns_a - p'_a of those lie outside A's prefix, so prefix collisions
-        # c >= ceil(t*ns_a) - (ns_a - p'_a). Pairs under the bound provably
-        # miss the threshold — the filter is lossless, and the dedup the
-        # old dropDuplicates paid becomes the same-shuffle count aggregate.
+        # joins were ~60% of the query's warm cost. Keeping the LARGER
+        # prefix p' = ns - ceil(beta*t*ns) + 1 (beta < 1) buys a SOUND
+        # pair-count bound: if C(A->B) >= t then |A∩B| >= ceil(t*ns_a), and
+        # at most ns_a - p'_a of those lie outside A's prefix, so prefix
+        # collisions c >= ceil(t*ns_a) - (ns_a - p'_a). Pairs under the
+        # bound provably miss the threshold.
         beta = 0.8
-        pa = F.col("ns") - F.ceil(F.lit(beta * threshold) * F.col("ns")) + 1
-        pref = (
-            shingles.join(dfreq, "shingle")
-            .withColumn(
-                "_r",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.col("_df").asc(), F.col("shingle").asc())
-                ),
-            )
-            .where(F.col("_r") <= pa)
-            .select("id", "shingle", "ns", pa.alias("_pa"))
+        pref = _rarest_prefix(
+            shingles, F.col("ns") - F.ceil(F.lit(beta * threshold) * F.col("ns")) + 1
         )
         cand = (
             pref.alias("a")
             .join(
-                inv.alias("b"),
+                shingles.select("id", "shingle").alias("b"),
                 (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") != F.col("b.id")),
             )
             .groupBy(
                 F.col("a.id").alias("id_a"),
                 F.col("b.id").alias("id_b"),
                 F.col("a.ns").alias("_nsa"),
-                F.col("a._pa").alias("_paa"),
+                F.col("a._p").alias("_paa"),
             )
             .agg(F.count("*").alias("_c"))
             .where(
@@ -591,64 +553,9 @@ def containment_pairs(
             .select("id_a", "id_b")
         )
     else:
-        cand = (
-            inv.alias("a")
-            .join(
-                inv.alias("b"),
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") != F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
-    aa = arrays.select(F.col("id").alias("id_a"), F.col("arr").alias("_arr_a"))
-    ab = arrays.select(F.col("id").alias("id_b"), F.col("arr").alias("_arr_b"))
-    cont = F.size(F.array_intersect("_arr_a", "_arr_b")) / F.size("_arr_a")
-    if broadcast_verify:
-        aa, ab = F.broadcast(aa), F.broadcast(ab)
-    else:
-        aa, ab = aa.hint("shuffle_hash"), ab.hint("shuffle_hash")
-    pairs = (
-        cand.join(aa, "id_a")
-        .join(ab, "id_b")
-        .where(cont >= threshold)
-        .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
-    )
-    if not collapse_exact:
-        return pairs
-    # Directed expansion: keep orientation (id_a stays the contained side),
-    # no reordering — both directions exist as separate representative rows
-    # whenever both pass the threshold.
-    ma = mem.select(F.col("_rep").alias("id_a"), F.col("_mid").alias("_xa"))
-    mb = mem.select(F.col("_rep").alias("id_b"), F.col("_mid").alias("_xb"))
-    # LEFT joins with identity fallback (r14; see the jaccard twin)
-    cross = (
-        pairs.join(ma, "id_a", "left")
-        .join(mb, "id_b", "left")
-        .select(
-            F.coalesce("_xa", F.col("id_a")).alias("id_a"),
-            F.coalesce("_xb", F.col("id_b")).alias("id_b"),
-            "containment",
-        )
-    )
-    eligible = arrays.select(F.col("id").alias("_erep"))
-    intra = (
-        mem.alias("x")
-        .join(
-            mem.alias("y"),
-            (F.col("x._rep") == F.col("y._rep"))
-            & (F.col("x._mid") != F.col("y._mid")),
-        )
-        .join(eligible, F.col("x._rep") == F.col("_erep"), "left_semi")
-        .select(
-            F.col("x._mid").alias("id_a"),
-            F.col("y._mid").alias("id_b"),
-            F.round(F.lit(1.0), 6).alias("containment"),
-        )
-    )
-    if threshold > 1.0:
-        return cross
-    return cross.unionByName(intra)
+        cand = _all_shingle_pairs(shingles, operator.ne)
+    pairs = _verify_pairs(cand, arrays, _containment, threshold, "containment")
+    return _expand_twins(pairs, mem, arrays, threshold, operator.ne, reorder=False)
 
 
 def _shingle_hash(col):
@@ -674,34 +581,43 @@ def _hashed_shingles(
     already found the rows unique, so that exchange moved the full
     stream to discover nothing). Output rows stay clustered by the
     input's doc partitioning, which per-doc windows downstream reuse."""
-    docs = ensure_min_parallelism(docs, id_col)
-    if unit == "char":
-        grams = F.expr(
-            f"""
-            array_distinct(transform(
-              sequence(1, length({text_col}) - {char_k - 1}),
-              i -> substring({text_col}, i, {char_k})))
-            """
-        )
-        base = docs.where(F.length(F.col(text_col)) >= char_k).select(
-            F.col(id_col).alias("id"), grams.alias("_g")
-        )
-    else:
-        toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: F.length(t) > 0)
-        grams = F.expr(
-            f"""
-            array_distinct(transform(
-              sequence(1, greatest(0, size(_toks) - {n - 1})),
-              i -> array_join(slice(_toks, i, {n}), ' ')))
-            """
-        )
-        base = (
-            docs.select(F.col(id_col).alias("id"), toks.alias("_toks"))
-            .where(F.size("_toks") >= n)
-            .select("id", grams.alias("_g"))
-        )
     harr = F.array_distinct(F.transform(F.col("_g"), lambda s: _shingle_hash(s)))
-    return base.select("id", F.explode(harr).alias("h"))
+    return _shingle_grams(docs, id_col, text_col, n, unit, char_k).select(
+        "id", F.explode(harr).alias("h")
+    )
+
+
+def _hot_shingles(
+    hashed: DataFrame, dfreq: DataFrame, max_df: int | str | None
+) -> DataFrame:
+    """``(h)``: the stop-shingles above the document-frequency cap —
+    ``max(16, ceil(0.001 * n_docs))`` for ``max_df="auto"``, ``max_df``
+    itself for an int, none for ``None``."""
+    if max_df is None:
+        hot = dfreq.where(F.lit(False))
+    elif max_df == "auto":
+        nd = hashed.agg(F.countDistinct("id").alias("_nd"))
+        cap = F.greatest(F.lit(16), F.ceil(F.lit(0.001) * F.col("_nd")))
+        hot = dfreq.crossJoin(F.broadcast(nd)).where(F.col("_df") > cap)
+    else:
+        hot = dfreq.where(F.col("_df") > F.lit(int(max_df)))
+    return hot.select("h")
+
+
+def _rarest_k(hashed: DataFrame, df_col: str, k: int) -> DataFrame:
+    """``(id, h, _sk)``: each doc's ``k`` rarest hashes by ``df_col`` (ties
+    by hash) — the containment screens' sketch — with ``_sk = min(|A|, k)``
+    the estimate's denominator."""
+    byid = Window.partitionBy("id")
+    return (
+        hashed.withColumn(
+            "_r",
+            F.row_number().over(byid.orderBy(F.col(df_col).asc(), F.col("h").asc())),
+        )
+        .withColumn("_ns", F.count("*").over(byid))
+        .where(F.col("_r") <= k)
+        .select("id", "h", F.least(F.col("_ns"), F.lit(k)).alias("_sk"))
+    )
 
 
 def containment_screened(
@@ -719,75 +635,48 @@ def containment_screened(
 ) -> DataFrame:
     """APPROXIMATE screening for directed containment (r11, per r10 VERDICT
     item 3) — the sub-output-bound sibling of :func:`containment_pairs`,
-    mirroring how ``minhash_dedup_pairs`` screens for
-    ``ngram_jaccard_pairs``. The exact path's x10 cost is OUTPUT-bound
-    (501k true pairs at the planted-twin fixture cost ~520 s of emit +
-    full ``array_intersect`` verify) and no length filter exists one-sided
-    (``dedup.py`` exact-path notes) — so the only cheaper path is a sketch.
+    as ``minhash_dedup_pairs`` is for ``ngram_jaccard_pairs``. The exact
+    path's x10 cost is OUTPUT-bound (501k true pairs at the planted-twin
+    fixture cost ~520 s of emit + full ``array_intersect`` verify) and no
+    one-sided length filter exists, so the only cheaper path is a sketch.
 
     Estimator: a DF-RAREST-K sketch — A's ``k`` globally rarest shingles
-    (document frequency ASC, hash ASC; the exact path's own anti-skew
-    prefix order, truncated to a CONSTANT ``k`` instead of the lossless
-    ``|A| - ceil(t*|A|) + 1`` that grows with doc length). With
-    ``m = |rarestk(A) ∩ B|`` (matched against B's FULL hashed set, not
-    B's sketch — one-sided containment must see all of B),
-    ``Ĉ(A→B) = m / min(|A|, k)``. This is deliberately NOT the uniform
-    bottom-k-by-hash sample: a uniform sample is size-biased toward hot
-    shingles (a sampled hash occurs with probability proportional to
-    nothing, so the expected df of a sampled occurrence is
-    ``sum(df^2)/sum(df)`` — measured ~80 on the sf0.1 corpus, ~800 at the
-    x10 twin corpus), and the sketch x index join volume explodes with
-    exactly the skew the exact path's df-ASC prefix exists to avoid
-    (measured: executor OOM at 8 GB at x10). Rare-first keeps the
-    estimate conservative in the right direction for a SCREEN: a true
-    subset clone (``C(A→B) = 1``) has ALL of A's shingles in B including
-    the rarest, so its estimate is exactly 1; overlap concentrated in
-    corpus boilerplate (the false-positive axis) scores LOW because hot
-    shingles never enter the sketch. When ``|A| <= k`` the sketch is the
-    whole (capped) set and the estimate is EXACT — screening degrades
-    gracefully to the exact answer on short docs.
+    (the exact path's anti-skew prefix order, truncated to a CONSTANT
+    ``k``) matched against B's FULL hashed set (one-sided containment must
+    see all of B): ``Ĉ(A→B) = |rarestk(A) ∩ B| / min(|A|, k)``. It is
+    deliberately NOT a uniform bottom-k-by-hash sample: a sampled
+    occurrence has expected df ``sum(df^2)/sum(df)`` (measured ~80 at
+    sf0.1, ~800 at the x10 twin corpus), and the sketch x index join
+    exploded with that skew (executor OOM at 8 GB at x10). Rare-first
+    errs the right way for a SCREEN: a true subset clone (``C = 1``) has
+    ALL of A's shingles in B, so its estimate is exactly 1, while overlap
+    in corpus boilerplate scores LOW. When ``|A| <= k`` the estimate is
+    EXACT. Per-doc fan-out is a constant ``k`` rows and scoring is one
+    map-side-combinable count aggregate. Hashes are the portable md5
+    bridge (``_shingle_hash``), so the estimates themselves are
+    value-hash-checked against the DuckDB oracle.
 
     Output ``(id_a, id_b, est_containment)`` for ordered pairs with
     ``Ĉ >= threshold - margin``; ``verify=True`` instead exact-verifies the
-    survivors with one ``array_intersect`` (same verify shape as the exact
-    path) and emits true ``containment >= threshold``. With
-    ``max_df=None`` (full-universe semantics) that output is a strict
+    survivors (the exact path's verify) and emits true
+    ``containment >= threshold``. With ``max_df=None`` that output is a
     SUBSET of :func:`containment_pairs` (recall floor pinned in
     ``tests/test_dedup.py``; 1.0 whenever every doc has ``<= k``
-    shingles). With the default stop-shingle cap active, the verify
-    arrays are built from the capped ``hashed`` set, so the verified
-    containment is over the INFORMATIVE-shingle universe ``U`` (below) —
-    dropping hot shingles from A's denominator can lift ``C`` over ``U``
-    ABOVE the full-universe value, so a pair can pass here whose
-    full-universe containment sits under the threshold. The subset-of-
-    the-exact-path contract therefore holds exactly when no shingle
-    exceeds the cap (true of high-entropy corpora and the test fixtures);
-    on corpora with boilerplate the two paths intentionally answer over
-    different universes, and U is the better screen (hot shingles are
-    shared by UNRELATED docs — the false-positive axis).
+    shingles).
 
-    Scale shape: per-doc candidate fan-out is a CONSTANT ``k`` rows (the
-    exact prefix filter emits ``|A| - ceil(t*|A|) + 1`` rows — GROWS with
-    doc length), and scoring is a count aggregate over the candidate join
-    (map-side combinable) instead of a per-pair full-array intersect.
-    Hashes are the portable md5 bridge (``_shingle_hash``), identical in
-    the DuckDB oracle, so the screened estimates themselves are
-    value-hash-checked.
-
-    The stop-shingle cap (ON by default) bounds the other skew axis — the
-    B side. Even rare-first sketches must join an index containing hot
-    shingles' postings; ``max_df="auto"`` drops shingles with document
-    frequency above ``max(16, ceil(0.001 * n_docs))`` from sketch AND
-    index consistently, so ``Ĉ`` is containment over the
-    INFORMATIVE-shingle universe ``U = {df <= cap}``:
-    ``|A∩B∩U| / min(|A∩U|, k)``. For subset-clone detection this is the
-    right universe (df-hot shingles are corpus boilerplate shared by
-    unrelated docs — keeping them only inflates false positives); it is
-    the standard stop-shingle practice of production near-dup systems.
-    The hot set is small by construction
-    (``#{h: df > cap} < total_shingle_occurrences / cap``), so its
+    The stop-shingle cap (ON by default) bounds the B-side skew axis:
+    ``max_df="auto"`` drops shingles with document frequency above
+    ``max(16, ceil(0.001 * n_docs))`` from sketch AND index, so ``Ĉ`` (and
+    the verified value) is containment over the INFORMATIVE-shingle
+    universe ``U = {df <= cap}``: ``|A∩B∩U| / min(|A∩U|, k)``. Dropping hot
+    shingles from A's denominator can lift ``C`` over ``U`` above its
+    full-universe value, so the subset contract holds exactly only when
+    no shingle exceeds the cap; U is the better screen, since hot
+    shingles are boilerplate shared by UNRELATED docs (the standard
+    stop-shingle practice of production near-dup systems). The hot set
+    is small (``< total_shingle_occurrences / cap`` hashes), so its
     exclusion is one broadcast anti-join. Pass an int for an absolute
-    cap, or ``None`` to disable (full-universe semantics; only safe on
+    cap, or ``None`` for full-universe semantics (only safe on
     high-entropy corpora).
     """
     # deduped on (id, h): an in-doc hash collision shrinks the set the same
@@ -798,33 +687,14 @@ def containment_screened(
     # rehearsal are ~2 GB serialized but ~10x that as deserialized JVM rows
     # — the deserialized default OOM'd the 8 GB single-JVM rehearsal before
     # the first join ran.
-    from pyspark import StorageLevel
-
     hashed = _hashed_shingles(
         docs, id_col, text_col, n=n, unit=unit, char_k=char_k
     ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     dfreq = hashed.groupBy("h").agg(F.count("*").alias("_df"))
     if max_df is not None:
-        if max_df == "auto":
-            nd = hashed.agg(F.countDistinct("id").alias("_nd"))
-            cap = F.greatest(F.lit(16), F.ceil(F.lit(0.001) * F.col("_nd")))
-            hot = dfreq.crossJoin(F.broadcast(nd)).where(F.col("_df") > cap)
-        else:
-            hot = dfreq.where(F.col("_df") > F.lit(int(max_df)))
-        hashed = hashed.join(F.broadcast(hot.select("h")), "h", "left_anti")
-    byid = Window.partitionBy("id")
-    sk = (
-        hashed.join(dfreq, "h")  # df attach: the rare-first sketch order
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                byid.orderBy(F.col("_df").asc(), F.col("h").asc())
-            ),
-        )
-        .withColumn("_ns", F.count("*").over(byid))
-        .where(F.col("_r") <= k)
-        .select("id", "h", F.least(F.col("_ns"), F.lit(k)).alias("_sk"))
-    )
+        hot = _hot_shingles(hashed, dfreq, max_df)
+        hashed = hashed.join(F.broadcast(hot), "h", "left_anti")
+    sk = _rarest_k(hashed.join(dfreq, "h"), "_df", k)
     cand = (
         sk.alias("a")
         .join(
@@ -847,15 +717,8 @@ def containment_screened(
     arrays = hashed.groupBy("id").agg(
         F.sort_array(F.collect_list("h")).alias("arr")
     )
-    aa = arrays.select(F.col("id").alias("id_a"), F.col("arr").alias("_arr_a"))
-    ab = arrays.select(F.col("id").alias("id_b"), F.col("arr").alias("_arr_b"))
-    cont = F.size(F.array_intersect("_arr_a", "_arr_b")) / F.size("_arr_a")
-    return (
-        screened.select("id_a", "id_b")
-        .join(aa.hint("shuffle_hash"), "id_a")
-        .join(ab.hint("shuffle_hash"), "id_b")
-        .where(cont >= threshold)
-        .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
+    return _verify_pairs(
+        screened.select("id_a", "id_b"), arrays, _containment, threshold, "containment"
     )
 
 
@@ -891,25 +754,15 @@ def containment_index(
     # the THREE consumers below — dfreq, the n_docs scalar, and the
     # anti-join — which otherwise each re-run the corpus md5-shingle
     # explode (measured: the unchecked build paid the explode twice)
-    from pyspark import StorageLevel
-
     hashed = _hashed_shingles(
         corpus, id_col, text_col, n=n, unit=unit, char_k=char_k
     ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
     dfreq = hashed.groupBy("h").agg(F.count("*").alias("_df"))
-    if max_df is None:
-        hot = dfreq.where(F.lit(False))
-    elif max_df == "auto":
-        nd = hashed.agg(F.countDistinct("id").alias("_nd"))
-        cap = F.greatest(F.lit(16), F.ceil(F.lit(0.001) * F.col("_nd")))
-        hot = dfreq.crossJoin(F.broadcast(nd)).where(F.col("_df") > cap)
-    else:
-        hot = dfreq.where(F.col("_df") > F.lit(int(max_df)))
     # the hot set is tiny by construction; materializing it here means the
     # caller's index checkpoint runs ONE anti-join over the hashed table
     # instead of re-deriving the df aggregate (and the n_docs scalar)
     # inside its own job
-    hot = hot.select("h").localCheckpoint()
+    hot = _hot_shingles(hashed, dfreq, max_df).localCheckpoint()
     index = hashed.join(F.broadcast(hot), "h", "left_anti").select("id", "h")
     return index, hot
 
@@ -951,19 +804,12 @@ def containment_screen_against(
         new_docs, id_col, text_col, n=n, unit=unit, char_k=char_k
     ).join(F.broadcast(corpus_hot), "h", "left_anti")
     dfreq = corpus_index.groupBy("h").agg(F.count("*").alias("_df"))
-    byid = Window.partitionBy("id")
-    sk = (
-        hashed_new.join(dfreq, "h", "left")
-        .withColumn("_dfr", F.coalesce(F.col("_df"), F.lit(0)))
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                byid.orderBy(F.col("_dfr").asc(), F.col("h").asc())
-            ),
-        )
-        .withColumn("_ns", F.count("*").over(byid))
-        .where(F.col("_r") <= k)
-        .select("id", "h", F.least(F.col("_ns"), F.lit(k)).alias("_sk"))
+    sk = _rarest_k(
+        hashed_new.join(dfreq, "h", "left").withColumn(
+            "_dfr", F.coalesce(F.col("_df"), F.lit(0))
+        ),
+        "_dfr",
+        k,
     )
     est = F.col("_c") / F.col("_sk")
     return (
@@ -1059,8 +905,6 @@ def minhash_dedup_pairs(
     # self-join's banding work between its two sides. (Same failure class
     # as the star loop's r7 deserialized-caching fix; caught the same way,
     # by the x100 rehearsal.)
-    from pyspark import StorageLevel
-
     sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, seed).localCheckpoint(
         eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
@@ -1333,7 +1177,6 @@ def dedup_components(
         except Exception:
             sc = None
             min_parts = 32
-        from pyspark import StorageLevel
 
         # Per-round storage decisions, recorded for operational telemetry
         # and so the 4M-edge regression test can assert the SERIALIZED

@@ -855,31 +855,16 @@ def test_star_big_graph_branch_serialized_and_exact(spark):
     assert LAST["repartitions"], LAST
 
 
-def test_containment_broadcast_verify_output_identical(spark, docs_df):
-    """broadcast_verify=True (the bench-scale opt-in) must be a pure
-    physical-strategy switch — byte-identical output to the default
-    shuffle-hash verify."""
-    from fdi_flow_spark.pipelines.dedup import containment_pairs
-
-    kw = dict(n=2, unit="word", threshold=0.5)
-    default = {
-        (r.id_a, r.id_b): r.containment for r in containment_pairs(docs_df, **kw).collect()
-    }
-    bcast = {
-        (r.id_a, r.id_b): r.containment
-        for r in containment_pairs(docs_df, broadcast_verify=True, **kw).collect()
-    }
-    assert default == bcast and len(default) > 0
-
-
 def test_exact_collapse_adaptive_skip_is_lossless(spark, docs_df):
     """r14: the digest-collapse runs ONLY when duplicate digests exist —
     on a dup-free corpus it is an algebraic identity whose ~5 extra
     exchanges per call are pure overhead (the r13-measured ~0.5-1 s at
-    sf0.1). Pin both sides: (a) with dups present, collapse on == off;
-    (b) on a dup-free corpus, the skipped plan == the forced-collapse
-    plan (digest_has_dups=True forces the machinery through the identity
-    case); (c) exact twins still emit 1.0 pairs through the collapse."""
+    sf0.1). Pinned: (a) with dups present, collapse on == off;
+    (b) on a dup-free corpus, the skipped (direct) plan == the explicit
+    collapse_exact=False plan; (c) exact twins still emit 1.0 pairs
+    through the collapse; (d) a PREBUILT dup map (the registry path)
+    matches the self-built one for both joins; (e) threshold > 1 emits
+    nothing, twin leg included."""
     from fdi_flow_spark.pipelines.dedup import containment_pairs
 
     # (a) dup corpus (docs_df carries 3 exact twins): collapse on == off
@@ -904,8 +889,8 @@ def test_exact_collapse_adaptive_skip_is_lossless(spark, docs_df):
         ngram_jaccard_pairs(nodup, n=2, threshold=0.5, collapse_exact=False)
     )
     assert skip == direct and len(skip) > 0
-    # ... and a PREBUILT dup map (the registry cache path) on the dup
-    # corpus matches the self-built path
+    # (d) a PREBUILT dup map (the registry cache path) on the dup corpus
+    # matches the self-built path
     mem = exact_dup_members(docs_df)
     assert mem.count() > 0
     cached = _pairs(
@@ -927,6 +912,17 @@ def test_exact_collapse_adaptive_skip_is_lossless(spark, docs_df):
         ).collect()
     }
     assert c_on == c_off and len(c_on) > 0
+    c_cached = {
+        (r.id_a, r.id_b): r.containment
+        for r in containment_pairs(
+            docs_df, n=2, unit="word", threshold=0.6, dup_members=mem
+        ).collect()
+    }
+    assert c_cached == c_on
+
+    # (e) no pair reaches J or C > 1: the twin leg must not emit its 1.0s
+    for join in (ngram_jaccard_pairs, containment_pairs):
+        assert join(docs_df, n=2, unit="word", threshold=1.5).count() == 0
 
 
 def test_collapse_twin_edge_cases(spark):
@@ -1097,3 +1093,34 @@ def test_containment_count_bound_keeps_boundary_pairs(spark):
         ).collect()
     }
     assert out == full
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        "ngram_jaccard_pairs",
+        "containment_pairs",
+        "containment_screened",
+        "containment_index",
+        "containment_screen_against",
+    ],
+)
+def test_unknown_unit_raises_before_any_job(spark, docs_df, call):
+    """A unit other than 'word' / 'char' (e.g. 'chars') used to shingle
+    silently on words. It must raise a ValueError naming the bad unit
+    before any Spark job runs — in particular before the exact pair
+    joins' collapse checkpoints the corpus."""
+    from fdi_flow_spark.pipelines import dedup
+
+    index = docs_df.select(F.col("doc_id").alias("id"), F.xxhash64("text").alias("h"))
+    args = {"containment_screen_against": (docs_df, index, index.select("h"))}
+    sc = spark.sparkContext
+    group = f"unknown-unit-{call}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="'chars'"):
+            getattr(dedup, call)(*args.get(call, (docs_df,)), unit="chars")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
