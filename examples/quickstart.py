@@ -278,7 +278,7 @@ def main() -> None:
     # 9. r7: model-based language ID (fastText-LID family), the composed
     # streaming ingest stage, and exact-dedup-first near-dup components.
     from fdi_flow_spark.pipelines.curation import curation_stream_score
-    from fdi_flow_spark.pipelines.dedup import near_dup_components_grouped
+    from fdi_flow_spark.pipelines.dedup import near_dup_components
     from fdi_flow_spark.pipelines.lid import lid_fit, lid_predict, multilingual_docs
     from fdi_flow_spark.pipelines.quality_model import nb_quality_fit
     from fdi_flow_spark.pipelines.selection import dsir_fit
@@ -305,7 +305,7 @@ def main() -> None:
         nb_quality_fit(corpus.withColumn("is_en", F.col("lang") == "en"), "is_en"),
         dsir_fit(corpus, corpus.where("source = 'src0'")),
     )
-    comps = near_dup_components_grouped(docs)
+    comps = near_dup_components(docs)
     print(
         "LID accuracy on cipher langs:", round(acc, 3),
         "| ingest-scored docs:", scored.count(),
@@ -314,9 +314,7 @@ def main() -> None:
 
     # 10. r8: exact cosine near-dup without a driver ceiling (block-grid
     # self-join — same output as the broadcast path, corpus never
-    # collected), and the default end-to-end components entry point
-    # (digest-collapse first; exact_first=False opts out).
-    from fdi_flow_spark.pipelines.dedup import near_dup_components
+    # collected).
     from fdi_flow_spark.pipelines.similarity import (
         cosine_near_dup_blocked,
         cosine_near_dup_pairs,
@@ -324,11 +322,9 @@ def main() -> None:
 
     exact_pairs = cosine_near_dup_pairs(emb, threshold=0.4)  # broadcast fast path
     blocked_pairs = cosine_near_dup_blocked(emb, threshold=0.4, rows_per_block=256)
-    default_comps = near_dup_components(docs)  # grouped execution by default
     print(
         "exact cosine pairs:", exact_pairs.count(),
         "| blocked path pairs (identical):", blocked_pairs.count(),
-        "| default components:", default_comps.select("component_id").distinct().count(),
     )
 
     spark.stop()

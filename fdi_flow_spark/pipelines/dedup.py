@@ -1088,210 +1088,138 @@ def dedup_components(
     id_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("id_a", "id_b"),
     max_iter: int = 20,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over near-dup pairs: the clustering step that
     turns pairwise matches (MinHash/Jaccard/cosine) into dedup groups.
     Returns ``(doc_id, component_id)`` with ``component_id`` = the smallest
     doc id in the component; with ``docs`` given, docs in no pair map to
     themselves (singletons), so the output covers the whole corpus.
+    Without ``docs`` the output covers only ids that sit in a pair with a
+    DIFFERENT id: self-pairs ``(i, i)`` are dropped as edges, so an id
+    seen only in a self-pair is omitted like any id in no pair (no pair
+    producer in this module emits self-pairs).
 
-    ``algorithm='label'`` (default): iterative min-label propagation — each
-    round is one hash-shuffle on the node key (edges join labels ->
-    per-node min -> merge), exiting on a converged round (changed-count
-    aggregate == 0) or ``max_iter``. Near-dup components are small and
-    dense (bounded diameter), so rounds ~ 2-4 in practice; a chain graph
-    of diameter > ``max_iter`` warns (see below).
-
-    ``algorithm='star'``: the large-star/small-star alternation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — converges in
-    O(log^2 n) rounds REGARDLESS of graph diameter, at the cost of two
-    shuffles per round instead of one. The right choice when the pair
-    graph can contain long chains. Fixpoint is detected by an edge-set
-    (count, hash-sum) fingerprint, one aggregate per round.
-
-    ``localCheckpoint`` cuts lineage per round in both algorithms so the
-    plan does not grow with iterations.
+    The algorithm is the large-star/small-star alternation (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC 2014): it
+    converges in O(log^2 n) rounds REGARDLESS of graph diameter, two
+    shuffles per round. Fixpoint is detected by an edge-set (count,
+    hash-xor) fingerprint, one aggregate per round; ``localCheckpoint``
+    cuts lineage per round so the plan does not grow with iterations. A
+    run that hits ``max_iter`` first warns (``RuntimeWarning``).
 
     CONTRACT (r14): the input pair stream is consumed WITHOUT a
-    deduplicating exchange, and the star path feeds single-orientation
-    edges — any algorithm added here must therefore be insensitive to
-    duplicate edges AND to edge orientation (both current algorithms are:
-    per-node minima cannot change under duplicates, ``_large_star``
-    symmetrizes internally, ``_small_star`` re-orients with
-    greatest/least). An algorithm without that property must re-add its
-    own ``.distinct()``/symmetrization over ``base``.
+    deduplicating exchange and in a single orientation — the star steps
+    are insensitive to duplicate edges AND to edge orientation
+    (``_large_star`` symmetrizes internally, ``_small_star`` re-orients
+    with greatest/least, and both only take per-node minima). A change of
+    algorithm without that property must re-add its own
+    ``.distinct()``/symmetrization over the input edges.
     """
     import warnings
 
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     ca, cb = pair_cols
-    base = pairs.select(F.col(ca).alias("src"), F.col(cb).alias("dst"))
-    # r14 (guide §2.4): the pre-r14 shape ran `.distinct()` over the
-    # symmetrized union — a full edge-stream Exchange + two-phase aggregate
-    # that discovers nothing when the pairs are already unique (every
-    # operator feeding this — minhash/jaccard/cosine pairs — emits distinct
-    # pairs with id_a < id_b, so the two union legs are disjoint). Both
-    # algorithms are duplicate-INSENSITIVE anyway: label propagation and the
-    # star steps only take per-node minima (duplicates cannot change a min),
-    # each star round ends in its own `.distinct()`, and a duplicate-bearing
-    # initial edge set costs the star loop at most one extra round before
-    # the checksum fixpoint — never a different output. The star path also
-    # drops the orientation union entirely: `_large_star` symmetrizes
-    # internally and `_small_star` re-orients with greatest/least, so a
-    # single-orientation edge set halves the checkpointed rows AND the
-    # first round's group/join volume. Label propagation keeps both
-    # orientations (its labels table and dst->src min joins need every
-    # node on the src side).
-    # materialize once: every round joins edges, and without the cut each
-    # round would recompute the entire upstream pair pipeline (MinHash,
-    # banding, ...) from scratch
-    if algorithm == "star":
-        edges = base.localCheckpoint(eager=True)
-    else:
-        edges = base.unionByName(
-            pairs.select(F.col(cb).alias("src"), F.col(ca).alias("dst"))
-        ).localCheckpoint(eager=True)
-    if algorithm == "star":
-        e = edges
-        prev = _star_edge_checksum(e)
-        converged = False
-        # Memory headroom for the per-round localCheckpoint (r7 VERDICT
-        # item 7: 28M edges OOM'd an 8 GiB single JVM): size the stored
-        # partition count by the CURRENT edge count (which the fixpoint
-        # checksum already measured — no extra job), so each checkpointed
-        # partition stays ~1M edges regardless of graph size, and nudge
-        # both GCs each round so the PREVIOUS round's now-unreferenced
-        # checkpoint blocks are actually released by ContextCleaner
-        # instead of piling up across rounds. On a real cluster the same
-        # sizing keeps per-executor checkpoint blocks bounded under
-        # executor-memory pressure.
-        rows_per_part = 1_000_000
-        # sparkContext is a classic-mode handle (raises under Spark Connect,
-        # ADVICE r8); it only feeds the GC nudge + a parallelism floor, so
-        # fall back to a sane floor without it.
-        try:
-            sc = pairs.sparkSession.sparkContext
-            min_parts = sc.defaultParallelism
-        except Exception:
-            sc = None
-            min_parts = 32
-
-        # Per-round storage decisions, recorded for operational telemetry
-        # and so the 4M-edge regression test can assert the SERIALIZED
-        # branch actually executed (r8 VERDICT item 6) — the one-shot 8 GiB
-        # probe (scripts/star_memory_probe.py) stays the full-scale check.
-        # Accumulated locally; published to LAST_STAR_RUN only on completion.
-        run_stats: dict = {"rounds": 0, "levels": [], "repartitions": []}
-        for _ in range(max_iter):
-            n_edges = prev[0]
-            stepped = _small_star(_large_star(e))
-            level = None  # default: Disk+Memory DESERIALIZED (fast, fat)
-            if n_edges > 4 * rows_per_part:
-                # big graph: store the round's checkpoint SERIALIZED (a
-                # (long, long) edge row deserialized is ~10x its serialized
-                # bytes on the JVM heap — the difference between 28M edges
-                # fitting an 8 GiB JVM and OOMing it), and resize so each
-                # stored partition stays ~1M edges
-                level = StorageLevel.MEMORY_AND_DISK
-                if n_edges > rows_per_part * min_parts:
-                    parts = int(min(8192, n_edges // rows_per_part + 1))
-                    stepped = stepped.repartition(parts)
-                    run_stats["repartitions"].append(parts)
-            run_stats["rounds"] += 1
-            run_stats["levels"].append(
-                "serialized_mem_and_disk" if level is not None else "default"
-            )
-            e = stepped.localCheckpoint(eager=True, storageLevel=level)
-            if n_edges > 4 * rows_per_part:
-                import gc as _gc
-
-                _gc.collect()
-                # JVM GC nudge between rounds frees the PREVIOUS round's
-                # dropped checkpoint blocks before the next one allocates.
-                # `_jvm` is a private classic-mode attribute that does not
-                # exist under Spark Connect (ADVICE r8) — degrade gracefully
-                # there; the load-bearing fix is the SERIALIZED storage
-                # level above, not this nudge.
-                try:
-                    if sc is not None:
-                        sc._jvm.System.gc()
-                except Exception:
-                    pass
-            cur = _star_edge_checksum(e)
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
-        if not converged:
-            warnings.warn(
-                f"dedup_components(algorithm='star') hit max_iter={max_iter} "
-                "before the edge set stabilized — component ids may be "
-                "unmerged upper bounds. Raise max_iter (rounds needed are "
-                "O(log^2 n)).",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        # Atomic publish: a single name rebind, so readers only ever see a
-        # complete run's snapshot (never a half-written mix of two runs).
-        global LAST_STAR_RUN
-        LAST_STAR_RUN = run_stats
-        # fixpoint edges form disjoint stars centered on component minima
-        out = (
-            e.select(F.col("src").alias("node"), F.col("dst").alias("label"))
-            .unionByName(
-                e.select(F.col("dst").alias("node"), F.col("dst").alias("label"))
-            )
-            .groupBy("node")
-            .agg(F.min("label").alias("component_id"))
-            .select(F.col("node").alias(id_col), "component_id")
-        )
-        if docs is None:
-            return out
-        d = docs.select(F.col(id_col))
-        return d.join(out, id_col, "left").select(
-            F.col(id_col),
-            F.coalesce("component_id", F.col(id_col)).alias("component_id"),
-        )
-
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+    # No `.distinct()` and no second orientation here (r14): every operator
+    # feeding this emits distinct pairs with id_a < id_b, a duplicate-
+    # bearing edge set costs at most one extra round before the checksum
+    # fixpoint (never a different output), and a single orientation halves
+    # the checkpointed rows and the first round's volume.
+    # Materialize once: without the cut each round would recompute the
+    # entire upstream pair pipeline (MinHash, banding, ...) from scratch.
+    e = pairs.select(F.col(ca).alias("src"), F.col(cb).alias("dst")).localCheckpoint(
+        eager=True
     )
+    prev = _star_edge_checksum(e)
+    converged = False
+    # Memory headroom for the per-round localCheckpoint (r7 VERDICT
+    # item 7: 28M edges OOM'd an 8 GiB single JVM): size the stored
+    # partition count by the CURRENT edge count (which the fixpoint
+    # checksum already measured — no extra job), so each checkpointed
+    # partition stays ~1M edges regardless of graph size, and nudge
+    # both GCs each round so the PREVIOUS round's now-unreferenced
+    # checkpoint blocks are actually released by ContextCleaner
+    # instead of piling up across rounds. On a real cluster the same
+    # sizing keeps per-executor checkpoint blocks bounded under
+    # executor-memory pressure.
+    rows_per_part = 1_000_000
+    # sparkContext is a classic-mode handle (raises under Spark Connect,
+    # ADVICE r8); it only feeds the GC nudge + a parallelism floor, so
+    # fall back to a sane floor without it.
+    try:
+        sc = pairs.sparkSession.sparkContext
+        min_parts = sc.defaultParallelism
+    except Exception:
+        sc = None
+        min_parts = 32
+
+    # Per-round storage decisions, recorded for operational telemetry
+    # and so the 4M-edge regression test can assert the SERIALIZED
+    # branch actually executed (r8 VERDICT item 6) — the one-shot 8 GiB
+    # probe (scripts/star_memory_probe.py) stays the full-scale check.
+    # Accumulated locally; published to LAST_STAR_RUN only on completion.
+    run_stats: dict = {"rounds": 0, "levels": [], "repartitions": []}
     for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
+        n_edges = prev[0]
+        stepped = _small_star(_large_star(e))
+        level = None  # default: Disk+Memory DESERIALIZED (fast, fat)
+        if n_edges > 4 * rows_per_part:
+            # big graph: store the round's checkpoint SERIALIZED (a
+            # (long, long) edge row deserialized is ~10x its serialized
+            # bytes on the JVM heap — the difference between 28M edges
+            # fitting an 8 GiB JVM and OOMing it), and resize so each
+            # stored partition stays ~1M edges
+            level = StorageLevel.MEMORY_AND_DISK
+            if n_edges > rows_per_part * min_parts:
+                parts = int(min(8192, n_edges // rows_per_part + 1))
+                stepped = stepped.repartition(parts)
+                run_stats["repartitions"].append(parts)
+        run_stats["rounds"] += 1
+        run_stats["levels"].append(
+            "serialized_mem_and_disk" if level is not None else "default"
         )
-        merged = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                "label",
-                F.least("label", F.coalesce("nbr_label", "label")).alias("new_label"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = merged.where(F.col("new_label") != F.col("label")).count()
-        labels = merged.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
+        e = stepped.localCheckpoint(eager=True, storageLevel=level)
+        if n_edges > 4 * rows_per_part:
+            import gc as _gc
+
+            _gc.collect()
+            # JVM GC nudge between rounds frees the PREVIOUS round's
+            # dropped checkpoint blocks before the next one allocates.
+            # `_jvm` is a private classic-mode attribute that does not
+            # exist under Spark Connect (ADVICE r8) — degrade gracefully
+            # there; the load-bearing fix is the SERIALIZED storage
+            # level above, not this nudge.
+            try:
+                if sc is not None:
+                    sc._jvm.System.gc()
+            except Exception:
+                pass
+        cur = _star_edge_checksum(e)
+        if cur == prev:
+            converged = True
             break
-    else:
-        # a chain-shaped graph of diameter > max_iter exits the loop still
-        # merging — never hand back silently-unmerged component ids
+        prev = cur
+    if not converged:
         warnings.warn(
-            f"dedup_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); component ids are unmerged "
-            "upper bounds. Raise max_iter, or pass algorithm='star' "
-            "(large-star/small-star, diameter-independent) if the pair "
-            "graph has long chains.",
+            f"dedup_components did not converge in max_iter={max_iter} "
+            "rounds (the edge set was still changing); component ids may be "
+            "unmerged upper bounds. Raise max_iter (rounds needed are "
+            "O(log^2 n)).",
             RuntimeWarning,
             stacklevel=2,
         )
-    out = labels.select(F.col("node").alias(id_col), F.col("label").alias("component_id"))
+    # Atomic publish: a single name rebind, so readers only ever see a
+    # complete run's snapshot (never a half-written mix of two runs).
+    global LAST_STAR_RUN
+    LAST_STAR_RUN = run_stats
+    # fixpoint edges form disjoint stars centered on component minima
+    out = (
+        e.select(F.col("src").alias("node"), F.col("dst").alias("label"))
+        .unionByName(
+            e.select(F.col("dst").alias("node"), F.col("dst").alias("label"))
+        )
+        .groupBy("node")
+        .agg(F.min("label").alias("component_id"))
+        .select(F.col("node").alias(id_col), "component_id")
+    )
     if docs is None:
         return out
     d = docs.select(F.col(id_col))
@@ -1470,7 +1398,6 @@ def span_contamination(
     text_col: str = "text",
     ref_id_col: str = "doc_id",
     ref_text_col: str = "text",
-    broadcast_reference: bool = False,
 ) -> DataFrame:
     """Span-level contamination detector: for each document, how many of
     its k-token windows appear verbatim ANYWHERE in a reference corpus
@@ -1484,17 +1411,15 @@ def span_contamination(
     ``docs`` may be a STREAMING DataFrame: the reference hash set is
     static, so the pipeline is one stream-static join (8-byte keys) plus a
     per-doc aggregation — batch and stream produce identical rows (see
-    tests/test_streaming.py). ``broadcast_reference=True`` forces the
-    reference set broadcast; by default Catalyst's size estimate decides
-    (a web-scale reference degrades to a shuffle join automatically)."""
+    tests/test_streaming.py). Catalyst's size estimate picks the join:
+    a small reference set is broadcast, a web-scale one degrades to a
+    shuffle join automatically."""
     ref = (
         _token_windows(reference, ref_id_col, ref_text_col, k)
         .select("h")
         .distinct()
         .withColumn("_hit", F.lit(True))
     )
-    if broadcast_reference:
-        ref = F.broadcast(ref)
     w = _token_windows(docs, id_col, text_col, k).join(ref, "h", "left")
     return (
         w.groupBy("id")
@@ -1749,45 +1674,13 @@ def near_dup_components(
     bands: int = 8,
     threshold: float = 0.2,
     seed: int = 42,
-    algorithm: str = "star",
-    exact_first: bool = True,
 ) -> DataFrame:
     """Corpus -> near-dup component labels, the end-to-end entry point.
-
-    ``exact_first=True`` (the default since r8) runs the digest-collapse
-    ordering (``near_dup_components_grouped``): collapse exact twins to one
-    representative per content digest BEFORE LSH banding, so the candidate
-    join never squares with the duplication factor — output proven identical
-    to the direct composition (shared oracle + planted-twin parity tests),
-    measured 62x faster at the 100x twin fixture. ``exact_first=False`` opts
-    out to the direct ``minhash_dedup_pairs -> dedup_components`` pipeline
-    (useful when the corpus is known exact-dup-free and the extra digest
-    shuffle buys nothing)."""
-    if exact_first:
-        return near_dup_components_grouped(
-            docs, id_col, text_col, n, num_hashes, bands, threshold, seed, algorithm
-        )
-    pairs = minhash_dedup_pairs(docs, id_col, text_col, n, num_hashes, bands, threshold, seed)
-    return dedup_components(pairs, docs=docs, id_col=id_col, algorithm=algorithm)
-
-
-def near_dup_components_grouped(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.2,
-    seed: int = 42,
-    algorithm: str = "star",
-) -> DataFrame:
-    """Near-dup components with the EXACT-DEDUP-FIRST ordering — the
-    production pipeline shape the r7 100x rehearsal measured into
-    existence: running MinHash banding directly on a corpus with exact-
-    twin groups explodes the candidate join by the SQUARE of the group
-    size (measured: 100 twins per doc -> 85,228x the pairs, the whole
-    join cost). Here the corpus first collapses to one representative per
+    It runs the EXACT-DEDUP-FIRST ordering, the production pipeline shape
+    the r7 100x rehearsal measured into existence: running MinHash
+    banding directly on a corpus with exact-twin groups explodes the
+    candidate join by the SQUARE of the group size (measured: 100 twins
+    per doc -> 85,228x the pairs, the whole join cost). Here the corpus first collapses to one representative per
     content digest (16-byte shuffle, the ``exact_dedup`` contract), LSH
     banding + components run over REPRESENTATIVES only, and members
     re-attach through their digest at the end.
@@ -1805,7 +1698,9 @@ def near_dup_components_grouped(
     twins, so collapsing them by digest would merge what the direct path
     leaves apart. The equality is pinned by a pytest parity test on a
     planted-twin corpus (including shingle-less twins); the 100x fixture
-    runs ~2 orders of magnitude less join work."""
+    runs ~2 orders of magnitude less join work. The direct ordering stays
+    available as that composition, e.g. for a corpus known to be free of
+    exact duplicates, where the digest shuffle buys nothing."""
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: F.length(t) > 0)
     flagged = docs.select(
         F.col(id_col).alias("id"),
@@ -1830,10 +1725,7 @@ def near_dup_components_grouped(
         reps, "rep", text_col, n, num_hashes, bands, threshold, seed
     )
     rep_comp = dedup_components(
-        rep_pairs,
-        docs=reps.select(F.col("rep").alias(id_col)),
-        id_col=id_col,
-        algorithm=algorithm,
+        rep_pairs, docs=reps.select(F.col("rep").alias(id_col)), id_col=id_col
     ).select(F.col(id_col).alias("rep"), F.col("component_id").alias("_rc"))
     # members inherit their representative's component; the component id
     # stays the smallest doc id in the component because representatives

@@ -2469,35 +2469,35 @@ def _register_dedup_components():
     @register("dedup_components", oracle)
     def q_dedup_components(spark, sf_dir):
         """Near-dup clustering: corpus -> components -> per-doc canonical
-        (min) id, singletons included. Since r8 this runs the DEFAULT
-        ``near_dup_components`` entry point, which is the exact-dedup-first
-        (digest-collapse) ordering — the 100 TB-correct shape the r7 100x
-        rehearsal measured 62x faster on twin-heavy corpora; output is
-        provably identical to the direct pairs->components composition
-        (shared oracle; planted-twin parity pytest; the direct path remains
-        the ``exact_first=False`` opt-out). ``algorithm='label'`` here vs
-        'star' in ``dedup_components_grouped`` keeps both component
-        algorithms under the driver's eye."""
-        from fdi_flow_spark.pipelines.dedup import near_dup_components
+        (min) id, singletons included, by the DIRECT composition
+        ``dedup_components(minhash_dedup_pairs(docs), docs=docs)``. It is
+        the only registry query that runs ``dedup_components`` on
+        un-collapsed pairs; sharing the oracle with
+        ``dedup_components_grouped`` proves the two orderings agree."""
+        from fdi_flow_spark.pipelines.dedup import (
+            dedup_components,
+            minhash_dedup_pairs,
+        )
 
         docs = load_table(spark, sf_dir, "documents")
-        return near_dup_components(docs, algorithm="label")
+        return dedup_components(minhash_dedup_pairs(docs), docs=docs)
 
     @register("dedup_components_grouped", oracle)
     def q_dedup_components_grouped(spark, sf_dir):
-        """The exact-dedup-FIRST ordering of the same clustering (r7 100x
-        rehearsal finding: twin groups explode the LSH candidate join by
-        the square of the group size — measured 85,228x pairs at 100x —
-        so production collapses exact duplicates to one representative
-        per digest BEFORE banding). Output is provably identical to
+        """The exact-dedup-FIRST ordering of the same clustering, i.e. the
+        ``near_dup_components`` entry point (r7 100x rehearsal finding:
+        twin groups explode the LSH candidate join by the square of the
+        group size — measured 85,228x pairs at 100x — so production
+        collapses exact duplicates to one representative per digest
+        BEFORE banding). Output is provably identical to
         ``dedup_components`` (signatures are pure functions of text), so
         it shares the recursive-closure oracle verbatim; a pytest parity
         test additionally pins equality on a planted-twin corpus where
         the orderings' costs diverge."""
-        from fdi_flow_spark.pipelines.dedup import near_dup_components_grouped
+        from fdi_flow_spark.pipelines.dedup import near_dup_components
 
         docs = load_table(spark, sf_dir, "documents")
-        return near_dup_components_grouped(docs)
+        return near_dup_components(docs)
 
 
 _register_dedup_components()

@@ -146,7 +146,8 @@ X100 = os.path.join(_REPO, ".scaling", "x100")
 # entry below, the plant-topology contract).
 X100_QUERIES = [
     "minhash_dedup_pairs",   # LSH banding
-    "dedup_components",      # star-contraction rounds
+    "dedup_components",      # direct ordering: un-collapsed pairs
+                             # -> star-contraction rounds
     "dedup_incremental",     # prebuilt-index shard arrival
     "cosine_topk_ivfpq",     # IVF-PQ probe (train + probe in-flight)
     "dsir_weights",          # hashed-gram count tables
@@ -155,9 +156,10 @@ X100_QUERIES = [
     "token_counts",          # linear projection baseline
     "bm25_search",           # broadcast stats + fixed-k TakeOrdered
     "language_id_model",     # NB LID fit+score (r7)
-    "dedup_components_grouped",  # exact-dedup-FIRST ordering: the fix the
-                                 # minhash twin-explosion measurement calls
-                                 # for; same output, rep-only LSH join
+    "dedup_components_grouped",  # near_dup_components, the exact-dedup-
+                                 # FIRST ordering: the fix the minhash
+                                 # twin-explosion measurement calls for;
+                                 # same output, rep-only LSH join
     "embedding_near_dup_blocked",  # r8: block-grid EXACT cosine pairs —
                                    # O(n^2) arithmetic is inherent, so the
                                    # honest expectation at 100x input is

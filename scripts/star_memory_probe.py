@@ -11,7 +11,7 @@ both GCs per round.
 
 This probe re-creates the failure shape — a 28M-edge clique graph (1,400
 groups x 200 members, all within-group pairs) — in a FRESH 8 GiB-driver
-Spark session, runs ``dedup_components(algorithm='star')``, verifies the
+Spark session, runs ``dedup_components`` (the star alternation), verifies the
 component count, and merges the result into SCALING.json under
 ``x100.star_memory_8g``. Run it standalone (it must own the JVM to set
 driver memory):
@@ -69,7 +69,7 @@ def main() -> None:
     ).select(F.col("a.node").alias("id_a"), F.col("b.node").alias("id_b"))
 
     t0 = time.perf_counter()
-    comp = dedup_components(pairs, id_col="node", algorithm="star")
+    comp = dedup_components(pairs, id_col="node")
     n_comp = comp.select("component_id").distinct().count()
     n_nodes = comp.count()
     elapsed = round(time.perf_counter() - t0, 1)

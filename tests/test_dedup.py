@@ -305,16 +305,11 @@ def test_dedup_components_hand_graph(spark):
         for r in dedup_components(pdf, docs=docs, max_iter=10).collect()
     }
     assert got == _union_find_components(pairs, docs_ids)
-
-
-def test_dedup_components_long_chain_converges(spark):
-    from fdi_flow_spark.pipelines.dedup import dedup_components
-
-    # a 12-node path needs ~diameter rounds of min propagation
-    pairs = [(i, i + 1) for i in range(1, 12)]
-    pdf = spark.createDataFrame(pairs, "id_a int, id_b int")
-    got = {r.doc_id: r.component_id for r in dedup_components(pdf, max_iter=15).collect()}
-    assert set(got.values()) == {1} and len(got) == 12
+    # no pairs at all: every doc is its own component
+    empty = spark.createDataFrame([], "id_a int, id_b int")
+    two = spark.createDataFrame([(1,), (2,)], "doc_id int")
+    got = {r.doc_id: r.component_id for r in dedup_components(empty, docs=two).collect()}
+    assert got == {1: 1, 2: 2}
 
 
 def test_dedup_components_warns_when_not_converged(spark):
@@ -338,25 +333,19 @@ def test_dedup_components_warns_when_not_converged(spark):
         dedup_components(pdf, max_iter=15).collect()
 
 
-def test_dedup_components_star_matches_label_and_union_find(spark):
-    """algorithm='star' (large-star/small-star) produces the identical
-    component map as union-find on the hand graph, including singletons."""
+def test_dedup_components_long_chain_converges(spark):
     from fdi_flow_spark.pipelines.dedup import dedup_components
 
-    pairs = [(2, 1), (2, 3), (5, 4), (9, 8), (8, 7)]
-    docs_ids = list(range(1, 11))
+    # a 12-node path merges into one component well inside max_iter
+    pairs = [(i, i + 1) for i in range(1, 12)]
     pdf = spark.createDataFrame(pairs, "id_a int, id_b int")
-    docs = spark.createDataFrame([(i,) for i in docs_ids], "doc_id int")
-    got = {
-        r.doc_id: r.component_id
-        for r in dedup_components(pdf, docs=docs, algorithm="star").collect()
-    }
-    assert got == _union_find_components(pairs, docs_ids)
+    got = {r.doc_id: r.component_id for r in dedup_components(pdf, max_iter=15).collect()}
+    assert set(got.values()) == {1} and len(got) == 12
 
 
 def test_dedup_components_star_long_chain_logarithmic_rounds(spark):
     """A 33-node path (diameter 32) converges with max_iter=8 under the
-    star alternation — the label-propagation path would need ~32 rounds."""
+    star alternation — min-label propagation would need ~32 rounds."""
     import warnings
 
     from fdi_flow_spark.pipelines.dedup import dedup_components
@@ -367,7 +356,7 @@ def test_dedup_components_star_long_chain_logarithmic_rounds(spark):
         warnings.simplefilter("error", RuntimeWarning)
         got = {
             r.doc_id: r.component_id
-            for r in dedup_components(pdf, max_iter=8, algorithm="star").collect()
+            for r in dedup_components(pdf, max_iter=8).collect()
         }
     assert set(got.values()) == {1} and len(got) == 33
 
@@ -378,6 +367,17 @@ def test_dedup_components_no_docs_omits_singletons(spark):
     pdf = spark.createDataFrame([(4, 2)], "id_a int, id_b int")
     got = {r.doc_id: r.component_id for r in dedup_components(pdf).collect()}
     assert got == {2: 2, 4: 2}
+    # a self-pair is no edge: an id seen only in a self-pair is omitted
+    # without docs, and maps to itself with docs
+    pdf = spark.createDataFrame([(1, 1), (2, 3)], "id_a int, id_b int")
+    got = {r.doc_id: r.component_id for r in dedup_components(pdf).collect()}
+    assert got == {2: 2, 3: 2}
+    docs = spark.createDataFrame([(1,), (2,), (3,)], "doc_id int")
+    got = {
+        r.doc_id: r.component_id
+        for r in dedup_components(pdf, docs=docs).collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 2}
 
 
 # ------------------------------------------------- exact span-level dedup
@@ -690,15 +690,16 @@ def test_streaming_incremental_dedup_matches_batch(spark):
 def test_grouped_components_equal_direct_on_planted_twins(spark):
     """Exact-dedup-first near-dup components (the r7 100x-rehearsal
     finding, operationalized): on a corpus with planted exact-twin groups
-    the grouped path must produce IDENTICAL component assignments to
-    running MinHash + components over the full corpus — signatures are
-    pure functions of text, so twins share connectivity."""
+    ``near_dup_components`` must produce IDENTICAL component assignments
+    to running MinHash + components over the full corpus — signatures are
+    pure functions of text, so twins share connectivity. Edge corpora
+    (empty, all NULL/"" texts, non-Latin twins) agree too."""
     from pyspark.sql import functions as F
 
     from fdi_flow_spark.pipelines.dedup import (
         dedup_components,
         minhash_dedup_pairs,
-        near_dup_components_grouped,
+        near_dup_components,
     )
     from fdi_flow_spark.sources.tables import load_table
 
@@ -721,10 +722,8 @@ def test_grouped_components_equal_direct_on_planted_twins(spark):
                 (F.col("doc_id") + 100_000 * i).alias("doc_id"), F.col("text")
             )
         )
-    direct = dedup_components(
-        minhash_dedup_pairs(twins), docs=twins, algorithm="star"
-    )
-    grouped = near_dup_components_grouped(twins)
+    direct = dedup_components(minhash_dedup_pairs(twins), docs=twins)
+    grouped = near_dup_components(twins)
     d = {r["doc_id"]: r["component_id"] for r in direct.collect()}
     g = {r["doc_id"]: r["component_id"] for r in grouped.collect()}
     assert d == g
@@ -734,6 +733,26 @@ def test_grouped_components_equal_direct_on_planted_twins(spark):
     base_ids = [r["doc_id"] for r in base.limit(5).collect()]
     for b in base_ids:
         assert g[b] == g[b + 100_000] == g[b + 200_000] == g[b + 300_000]
+
+    def both(rows):
+        corpus = spark.createDataFrame(rows, "doc_id long, text string")
+        got, want = (
+            {r["doc_id"]: r["component_id"] for r in df.collect()}
+            for df in (
+                near_dup_components(corpus),
+                dedup_components(minhash_dedup_pairs(corpus), docs=corpus),
+            )
+        )
+        assert got == want
+        return got
+
+    assert both([]) == {}
+    # texts without shingles: every doc is a singleton
+    blank = [(1, None), (2, ""), (3, None), (4, "")]
+    assert both(blank) == {1: 1, 2: 2, 3: 3, 4: 4}
+    # non-Latin exact twins: one component per pair
+    ja, ru = "日本語 テキスト です", "русский текст здесь"
+    assert both([(1, ja), (2, ja), (3, ru), (4, ru)]) == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
 def test_minhash_bucket_cap_output_identical_and_chunks_bounded(spark):
@@ -789,21 +808,25 @@ def test_minhash_bucket_cap_output_identical_and_chunks_bounded(spark):
 
 
 def test_near_dup_components_default_is_grouped_with_direct_optout(spark):
-    """r8: the end-to-end entry point defaults to the digest-collapse
-    ordering (the plan contains the md5 digest stage) while
-    ``exact_first=False`` opts back out to the direct composition — and
-    both give identical labels on the real corpus."""
+    """The end-to-end entry point uses the digest-collapse ordering (the
+    plan contains the digest stage), while a caller who wants the direct
+    composition spells it out as ``dedup_components(minhash_dedup_pairs)``
+    — and both give identical labels on the real corpus."""
     import contextlib
     import io
 
-    from fdi_flow_spark.pipelines.dedup import near_dup_components
+    from fdi_flow_spark.pipelines.dedup import (
+        dedup_components,
+        minhash_dedup_pairs,
+        near_dup_components,
+    )
     from fdi_flow_spark.sources.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
     grouped = near_dup_components(docs)
-    direct = near_dup_components(docs, exact_first=False)
+    direct = dedup_components(minhash_dedup_pairs(docs), docs=docs)
 
     def plan_of(df):
         buf = io.StringIO()
@@ -842,7 +865,7 @@ def test_star_big_graph_branch_serialized_and_exact(spark):
         b, (F.col("a.g") == F.col("b.g")) & (F.col("a.node") < F.col("b.node"))
     ).select(F.col("a.node").alias("id_a"), F.col("b.node").alias("id_b"))
 
-    comp = dd.dedup_components(pairs, id_col="node", algorithm="star")
+    comp = dd.dedup_components(pairs, id_col="node")
     n_comp = comp.select("component_id").distinct().count()
     assert n_comp == n_groups
     assert comp.count() == n_groups * group_size
@@ -1034,33 +1057,28 @@ def test_dedup_components_duplicate_and_reversed_pairs_identical(spark):
     symmetrizes internally). Both rely on the algorithms being duplicate-
     and orientation-INSENSITIVE: a pair list with exact duplicates and
     reversed duplicates must produce components identical to its clean
-    form under both algorithms."""
+    form."""
     from fdi_flow_spark.pipelines.dedup import dedup_components
 
     clean = [(1, 2), (2, 3), (7, 8), (10, 11), (11, 12)]
     messy = clean + [(2, 1), (3, 2), (7, 8), (8, 7), (12, 11), (10, 11)]
     docs = spark.createDataFrame([(i,) for i in range(1, 14)], "doc_id int")
-    for algorithm in ("label", "star"):
-        want = {
-            r.doc_id: r.component_id
-            for r in dedup_components(
-                spark.createDataFrame(clean, "id_a int, id_b int"),
-                docs=docs,
-                algorithm=algorithm,
-            ).collect()
-        }
-        got = {
-            r.doc_id: r.component_id
-            for r in dedup_components(
-                spark.createDataFrame(messy, "id_a int, id_b int"),
-                docs=docs,
-                algorithm=algorithm,
-            ).collect()
-        }
-        assert got == want, algorithm
-        assert want[1] == want[2] == want[3] == 1
-        assert want[10] == want[11] == want[12] == 10
-        assert want[13] == 13  # singleton via docs fallback
+    want = {
+        r.doc_id: r.component_id
+        for r in dedup_components(
+            spark.createDataFrame(clean, "id_a int, id_b int"), docs=docs
+        ).collect()
+    }
+    got = {
+        r.doc_id: r.component_id
+        for r in dedup_components(
+            spark.createDataFrame(messy, "id_a int, id_b int"), docs=docs
+        ).collect()
+    }
+    assert got == want
+    assert want[1] == want[2] == want[3] == 1
+    assert want[10] == want[11] == want[12] == 10
+    assert want[13] == 13  # singleton via docs fallback
 
 
 def test_containment_count_bound_keeps_boundary_pairs(spark):
